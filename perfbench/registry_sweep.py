@@ -10,10 +10,12 @@ order of each pass; data is the committed copy of the testdata under
 ``data/``. A run makes at least ``MIN_PASSES`` passes, more while its
 seconds are not used up, and a pass always completes.
 
-Set-up loads every testdata table through ``load_table``, three times.
-The first timed pass runs on a cold engine and later ones on a warm
-one; both are what a user of a fresh session sees.
-Every result is checked after the timed region against
+Set-up loads every testdata table through ``load_table``, three times,
+then runs one untimed warm-up pass over the subset, so the timed passes
+see a warm engine (JIT, class loading, the first job of each plan
+shape) whatever order the seed picks. The rate and the geometric mean
+are taken over each query's median time across the timed passes.
+Every result, the warm-up's too, is checked after the timed region against
 ``QuerySpec.oracle`` run by DuckDB over the same parquet files. Oracle
 results are kept under ``.perfbench_out/oracle/``, keyed by the SQL and
 the data directory, because one of them takes DuckDB half a minute.
@@ -60,8 +62,7 @@ MODULES = ("core_sql", "core_sql2", "core_sql3", "core_sql4", "core_sql5",
            "core_sql6", "analytics_ops", "search_ops", "llm_ops",
            "streaming_ops", "multimodal_ops", "library_gate")
 CATALOG_REPS = 3
-#: passes every run makes, the first on a cold engine; a fixed count
-#: keeps the cold share of the samples the same in every run
+#: timed passes every run makes at least, after the warm-up pass
 MIN_PASSES = 2
 
 
@@ -105,32 +106,26 @@ def run(ctx) -> dict:
             with tracer.span("catalog.load", table=name):
                 load_table(spark, sf_dir, name)
         reps.append(time.perf_counter() - t0)
+    # ---- warm-up pass, untimed and untraced -----------------------------
+    failures: list[str] = []
+    w0 = time.perf_counter()
+    with tracer.paused():
+        warm = [r for r in (_run_one(spark, tracer, sf_dir, name, failures)
+                            for name in SUBSET) if r]
+    warm_s = time.perf_counter() - w0
     # ---- timed passes ---------------------------------------------------
     rng = random.Random(ctx.seed)
-    runs, failures = [], []
+    runs = []
     start = time.perf_counter()
     passes = 0
     while passes < MIN_PASSES or time.perf_counter() - start < ctx.seconds:
         order = list(SUBSET)
         rng.shuffle(order)
         for name in order:
-            spec, mod = QUERIES[name], module_of(name)
-            t0 = time.perf_counter()
-            try:
-                with tracer.span(f"plans.{mod}.build", query=name):
-                    df = spec.fn(spark, sf_dir)
-                t1 = time.perf_counter()
-                with tracer.span(f"plans.{mod}.exec", query=name):
-                    got = df.toPandas()
-                t2 = time.perf_counter()
-            except Exception as exc:  # a failing query is counted, not fatal
-                failures.append(f"{name}: raised {type(exc).__name__}: "
-                                f"{str(exc).splitlines()[0][:200]}")
-                continue
-            runs.append({"name": name, "s": t2 - t0, "build": t1 - t0,
-                         "got": got})
+            r = _run_one(spark, tracer, sf_dir, name, failures)
+            if r:
+                runs.append(r)
         passes += 1
-    window = time.perf_counter() - start
     peak = ctx.peak_rss_mb()
 
     # ---- checks ---------------------------------------------------------
@@ -140,7 +135,7 @@ def run(ctx) -> dict:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
                     f"read_parquet('{os.path.join(sf_dir, t)}.parquet')")
     want, data_key = {}, data_digest(sf_dir)
-    for r in runs:
+    for r in warm + runs:
         name = r["name"]
         if name not in want:
             want[name] = oracle(con, name, data_key)
@@ -155,11 +150,12 @@ def run(ctx) -> dict:
     for r in runs:
         per_query.setdefault(r["name"], []).append(r["s"])
     out = {
-        "setup_parts": {"catalog_loads": statistics.median(reps)},
+        "setup_parts": {"catalog_loads": statistics.median(reps),
+                        "warm_up_pass": warm_s},
         "latencies": lat,
-        "window_s": window,
+        "op_times": [statistics.median(v) for v in per_query.values()],
         "peak_rss_mb": peak,
-        "attempted": passes * len(SUBSET),
+        "attempted": (passes + 1) * len(SUBSET),
         "failures": failures,
         "summary": {
             **{f"query.{q}.p50_s": (statistics.median(v), "s")
@@ -174,8 +170,28 @@ def run(ctx) -> dict:
     return out
 
 
+def _run_one(spark, tracer, sf_dir: str, name: str,
+             failures: list[str]) -> dict | None:
+    """Build and collect one query; a failing query is counted, not
+    fatal."""
+    spec, mod = QUERIES[name], module_of(name)
+    t0 = time.perf_counter()
+    try:
+        with tracer.span(f"plans.{mod}.build", query=name):
+            df = spec.fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        with tracer.span(f"plans.{mod}.exec", query=name):
+            got = df.toPandas()
+        t2 = time.perf_counter()
+    except Exception as exc:
+        failures.append(f"{name}: raised {type(exc).__name__}: "
+                        f"{str(exc).splitlines()[0][:200]}")
+        return None
+    return {"name": name, "s": t2 - t0, "build": t1 - t0, "got": got}
+
+
 def _layers(tracer, passes: int) -> dict:
-    """Per-layer metrics, per pass over the subset."""
+    """Per-layer metrics, per timed pass over the subset."""
     spans = tracer.spans
     per = 1.0 / passes
 

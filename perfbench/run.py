@@ -23,7 +23,7 @@ scale 0.02.
 
 The run itself happens in a child process started with the repository
 root on ``PYTHONPATH`` (so Python UDF workers import the package), with
-``SPARK_GRAFT_CPUS`` set to the usable cores, an explicit driver heap,
+one Spark task thread (``SPARK_GRAFT_CPUS=1``), an explicit driver heap,
 and a scratch directory under ``.perfbench_tmp/`` as working directory,
 ``TMPDIR``, JVM temp dir and ``SPARK_LOCAL_DIRS``. The child leads a
 session of its own; every process of that session is stopped, and the
@@ -95,7 +95,12 @@ def main() -> int:
     env.update({
         "PYTHONPATH": os.pathsep.join(
             p for p in (str(ROOT), env.get("PYTHONPATH")) if p),
-        "SPARK_GRAFT_CPUS": str(len(os.sched_getaffinity(0))),
+        # One task thread. On a shared virtual host the hypervisor steals
+        # time from single vCPUs; with a task thread per core every stage
+        # waits for the task on the stalled core, so a few percent of
+        # steal slowed runs by a third. One thread leaves the other cores
+        # to the JVM's compiler and collector and to the Python side.
+        "SPARK_GRAFT_CPUS": "1",
         "SPARK_GRAFT_DRIVER_MEM": DRIVER_MEM,
         "SPARK_LOCAL_DIRS": str(scratch / "spark-local"),
         "TMPDIR": str(tmp),

@@ -71,6 +71,16 @@ class Tracer:
                 self.sc.setLocalProperty("spark.job.description", None)
             self.overhead_s += time.perf_counter() - sp.end
 
+    @contextlib.contextmanager
+    def paused(self):
+        """Calls inside record no spans: warm-up work in set-up, which
+        the per-layer metrics leave out as the end-to-end ones do."""
+        enabled, self.enabled = self.enabled, False
+        try:
+            yield
+        finally:
+            self.enabled = enabled
+
     def _group(self, idx: int) -> str:
         return f"{self.run_id}:{idx}"
 
