@@ -14,7 +14,7 @@ band index, ``operators/dedup_index.py``):
   ``tx_write_parts``). Per-row norm² is precomputed and stored so
   queries never touch the raw vectors twice.
 - **query** — rank cells by query·centroid, read ONLY the probed
-  cells' partitions (``tx_read_parts(part_values=…)``: metadata-only
+  cells' partitions (``tx_read(part_values=…)``: metadata-only
   pruning — unprobed cells' files are never listed, never read),
   exact cosine re-rank inside the candidates. Query cost is
   proportional to the probed fraction of the corpus, not the corpus.
@@ -58,7 +58,6 @@ from ..sources.txlog import (
     tx_merge_parts,
     tx_part_values,
     tx_read,
-    tx_read_parts,
     tx_write,
     tx_write_parts,
 )
@@ -102,11 +101,11 @@ def _load_centroids(spark: SparkSession, root: str) -> list[list[float]]:
     doubles Spark wrote."""
     import pyarrow.parquet as pq
 
-    from ..sources.txlog import _visible_dirs
+    from ..sources.txlog import _snapshot_dirs
 
     cent_t, _ = _tables(root)
     root_p = Path(cent_t)
-    dirs = _visible_dirs(cent_t)
+    dirs = _snapshot_dirs(cent_t)
     if not dirs:
         # Loud-failure contract parity with the tx_read path this
         # replaced: a missing/never-built index must raise, not return
@@ -321,7 +320,7 @@ def ann_index_upsert(spark: SparkSession, root: str, new_vectors: DataFrame,
     # it depends on which file seeds schema inference). Casting BEFORE
     # assignment keeps cell choice, stored vector, and stored norm²
     # mutually consistent at the index's own precision.
-    stored = tx_read_parts(spark, asg_t, as_of=base)
+    stored = tx_read(spark, asg_t, as_of=base)
     stored_t = stored.schema["vec"].dataType
     if new_vectors.schema[vec_col].dataType != stored_t:
         new_vectors = new_vectors.withColumn(
@@ -429,7 +428,7 @@ def ann_index_query(spark: SparkSession, root: str, queries: DataFrame,
     # kmeans can leave cells empty, so a small n_probe over an unlucky
     # query set may select ONLY empty cells: intersect with the cells
     # that physically exist (commit-log metadata, no listing) and
-    # return an empty result rather than tripping tx_read_parts's
+    # return an empty result rather than tripping tx_read's
     # no-visible-partition raise. Partial overlap degrades gracefully
     # (the probe simply sees fewer candidates, same as FAISS).
     avail = set(tx_part_values(asg_t))
@@ -442,8 +441,8 @@ def ann_index_query(spark: SparkSession, root: str, queries: DataFrame,
             T.StructField("neighbor_id", id_t),
             T.StructField("cos", T.DoubleType()),
             T.StructField("rank", T.IntegerType())]))
-    cand = tx_read_parts(spark, asg_t,
-                         part_values=[str(c) for c in probed])
+    cand = tx_read(spark, asg_t,
+                   part_values=[str(c) for c in probed])
     tomb = _tombstone_ids(spark, root)
     if tomb is not None:  # merge-on-read: tombstoned ids never score
         # No emptiness pre-probe (r13): the anti-join of an empty
@@ -489,7 +488,7 @@ def ann_index_cell_stats(spark: SparkSession, root: str) -> DataFrame:
     fits the data distribution: retrain via
     :func:`ann_index_build`."""
     _, asg_t = _tables(root)
-    return (tx_read_parts(spark, asg_t)
+    return (tx_read(spark, asg_t)
             .groupBy("cell").agg(F.count(F.lit(1)).alias("n_vectors"))
             .orderBy("cell"))
 
@@ -541,7 +540,7 @@ def ann_index_maintain(spark: SparkSession, root: str,
         n_tomb = tomb.count() if tomb is not None else 0
     if n_tomb:
         with no_aqe(spark):
-            n_phys = tx_read_parts(spark, asg_t).count()
+            n_phys = tx_read(spark, asg_t).count()
         frac = n_tomb / max(n_phys, 1)
         report["tombstone_frac"] = round(frac, 4)
         if frac > rebuild_tombstone_frac:
@@ -555,7 +554,7 @@ def ann_index_maintain(spark: SparkSession, root: str,
                 # those re-reads EVERY assignments partition and
                 # re-runs the tombstone anti-join (3+ full-index
                 # passes instead of one).
-                live = (tx_read_parts(spark, asg_t)
+                live = (tx_read(spark, asg_t)
                         .join(F.broadcast(tomb), "id", "left_anti")
                         .select(F.col("id").alias(id_col),
                                 F.col("vec").alias(vec_col))

@@ -230,14 +230,14 @@ def maintain_index(spark: SparkSession, index_root: str, *,
     """
     from ..sources.compaction import _list_parquet_files
     from ..sources.txlog import (
-        _visible_dirs, tx_checkpoint, tx_expire_checkpoints,
+        _snapshot_dirs, tx_checkpoint, tx_expire_checkpoints,
         tx_truncate_log, tx_vacuum,
     )
 
     bands_t, sh_t, _ = _paths(index_root)
     out: dict = {}
     for t in (bands_t, sh_t):
-        dirs = _visible_dirs(t)
+        dirs = _snapshot_dirs(t)
         n_files = total = 0
         for d in dirs:
             nf, nb = _list_parquet_files(spark, str(Path(t) / d))

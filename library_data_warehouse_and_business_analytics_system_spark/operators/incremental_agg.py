@@ -28,8 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.txlog import (tx_diff_parts, tx_latest_id, tx_read,
-                             tx_read_parts, tx_write)
+from ..sources.txlog import tx_diff_parts, tx_latest_id, tx_read, tx_write
 
 
 def _rollup(rows: DataFrame, group_cols: list[str],
@@ -49,7 +48,7 @@ def build_sum_aggregate(spark: SparkSession, fact_table: str,
     snapshot; returns the fact VERSION the aggregate now reflects —
     the caller persists it and hands it to the next ``refresh``."""
     version = tx_latest_id(fact_table)
-    fact = tx_read_parts(spark, fact_table, as_of=version)
+    fact = tx_read(spark, fact_table, as_of=version)
     agg = _rollup(fact, group_cols, sum_cols, signed=False)
     tx_write(agg, agg_table, mode="overwrite", txn_id=txn_id)
     return version
@@ -123,7 +122,7 @@ def build_minmax_aggregate(spark: SparkSession, fact_table: str,
                            val_cols: list[str],
                            txn_id: str | None = None) -> int:
     version = tx_latest_id(fact_table)
-    fact = tx_read_parts(spark, fact_table, as_of=version)
+    fact = tx_read(spark, fact_table, as_of=version)
     tx_write(_minmax_rollup(fact, group_cols, val_cols), agg_table,
              mode="overwrite", txn_id=txn_id)
     return version
@@ -179,7 +178,7 @@ def refresh_minmax_aggregate(spark: SparkSession, fact_table: str,
         .localCheckpoint(eager=True)
     n_recomputed = affected.count()
     if n_recomputed:
-        base = tx_read_parts(spark, fact_table, as_of=version)
+        base = tx_read(spark, fact_table, as_of=version)
         recomputed = _minmax_rollup(
             base.join(affected, group_cols, "left_semi"),
             group_cols, val_cols)

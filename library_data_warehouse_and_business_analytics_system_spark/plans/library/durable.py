@@ -38,9 +38,8 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ...sources.txlog import (
-    tx_merge_parts, tx_read, tx_read_parts, tx_write, tx_write_parts,
-)
+from ...operators.merge import insert_not_exists
+from ...sources.txlog import tx_merge_parts, tx_read, tx_write, tx_write_parts
 from ...sources.txmulti import (
     publish_manifest, read_consistent, snapshot_current,
 )
@@ -103,17 +102,13 @@ def read_warehouse(spark: SparkSession, root: str,
     can never surface as dims-advanced/facts-stale to this reader.
     The default reads each table's latest commit (what a same-process
     caller wants right after loading)."""
+    names = [*DIMS, *FACT_KEYS]
     if consistent or manifest_id is not None:
-        got = read_consistent(spark, root, list(DIMS), list(FACT_KEYS),
-                              manifest_id=manifest_id)
-        return {n: (df.drop(YEAR_KEY) if n in FACT_KEYS else df)
-                for n, df in got.items()}
-    out: dict[str, DataFrame] = {}
-    for name in DIMS:
-        out[name] = tx_read(spark, f"{root}/{name}")
-    for name in FACT_KEYS:
-        out[name] = tx_read_parts(spark, f"{root}/{name}").drop(YEAR_KEY)
-    return out
+        got = read_consistent(spark, root, names, manifest_id=manifest_id)
+    else:
+        got = {n: tx_read(spark, f"{root}/{n}") for n in names}
+    return {n: (df.drop(YEAR_KEY) if n in FACT_KEYS else df)
+            for n, df in got.items()}
 
 
 def subsequent_load_durable(spark: SparkSession, root: str,
@@ -128,16 +123,8 @@ def subsequent_load_durable(spark: SparkSession, root: str,
     oltp_delta = screen_oltp(oltp_delta, validate_mode, None)
 
     # --- dims (whole-generation overwrite, reference order :27-169) --
-    dims = {n: tx_read(spark, f"{root}/{n}") for n in DIMS}
-    if "book_titles" in oltp_delta:
-        dims["dim_book"] = INC.insert_new_dim_books(
-            dims["dim_book"], oltp_delta["book_titles"])
-    if "members" in oltp_delta:
-        dims["dim_members"] = INC.insert_new_dim_members(
-            dims["dim_members"], oltp_delta["members"], as_of)
-    if "suppliers" in oltp_delta:
-        dims["dim_suppliers"] = INC.insert_new_dim_suppliers(
-            dims["dim_suppliers"], oltp_delta["suppliers"])
+    dims = INC.insert_dim_deltas(
+        {n: tx_read(spark, f"{root}/{n}") for n in DIMS}, oltp_delta, as_of)
     for n in ("dim_book", "dim_members", "dim_suppliers"):
         tx_write(dims[n], f"{root}/{n}", mode="overwrite")
 
@@ -156,7 +143,6 @@ def subsequent_load_durable(spark: SparkSession, root: str,
             oltp_delta["borrowed_books"], oltp["book_copies"], dim_date,
             dims["dim_members"], dims["dim_book"], as_of), dim_date)
         keys = FACT_KEYS["fact_borrowing"]
-        from ...operators.merge import insert_not_exists
         tx_merge_parts(
             spark, f"{root}/fact_borrowing", delta, keys=keys,
             part_col=YEAR_KEY,

@@ -60,6 +60,25 @@ def insert_new_dim_suppliers(dim_suppliers: DataFrame,
                            "supplierId", "supplierKey")
 
 
+def insert_dim_deltas(dw: dict[str, DataFrame],
+                      oltp_delta: dict[str, DataFrame],
+                      as_of: dt.date) -> dict[str, DataFrame]:
+    """The three dim inserts in the reference's order (:27-169): a copy
+    of ``dw`` whose book/member/supplier dims gained the delta's new
+    rows. Shared by the in-memory and the durable subsequent load."""
+    out = dict(dw)
+    if "book_titles" in oltp_delta:
+        out["dim_book"] = insert_new_dim_books(out["dim_book"],
+                                               oltp_delta["book_titles"])
+    if "members" in oltp_delta:
+        out["dim_members"] = insert_new_dim_members(
+            out["dim_members"], oltp_delta["members"], as_of)
+    if "suppliers" in oltp_delta:
+        out["dim_suppliers"] = insert_new_dim_suppliers(
+            out["dim_suppliers"], oltp_delta["suppliers"])
+    return out
+
+
 # ---------------------------------------------------------------------------
 # SCD2 change application: Prod_Update_DimBook tracks (price, status)
 # (06_Type2_DimBook.sql:34-46); Prod_Update_DimMembers_T2 tracks
@@ -83,27 +102,6 @@ def scd2_update_dim_book(dim_book: DataFrame, changed_titles: DataFrame,
                       tracked=["price", "bookStatus"],
                       carried=["title", "author", "genre", "popularity"],
                       surrogate_key="bookKey", effective_date=effective)
-
-
-def scd2_update_dim_members(dim_members: DataFrame, changed_members: DataFrame,
-                            as_of: dt.date) -> DataFrame:
-    updates = changed_members.select(
-        "memberId",
-        F.upper(F.trim("memberName")).alias("memberName"),
-        X.member_state(F.col("memberAddress")).alias("state"),
-        X.member_city(F.col("memberAddress")).alias("city"),
-        X.age_band(F.col("memberAge")).alias("memberAgeRange"),
-        X.gender_norm(F.col("memberGender")).alias("memberGender"),
-        X.member_duration_text(F.col("registrationDate"), F.lit(as_of))
-        .alias("MemberDuration"),
-        (F.col("memberStatus") != "active").alias("_inactive"),
-    )
-    return scd2_apply(dim_members, updates, "memberId",
-                      tracked=["memberName", "state", "city"],
-                      carried=["memberAgeRange", "memberGender",
-                               "MemberDuration"],
-                      surrogate_key="memberKey", effective_date=as_of,
-                      close_only_flag="_inactive")
 
 
 # ---------------------------------------------------------------------------
@@ -160,16 +158,7 @@ def subsequent_load(spark: SparkSession, dw: dict[str, DataFrame],
     passed alongside is assumed already-loaded, hence already clean).
     """
     oltp_delta = screen_oltp(oltp_delta, validate_mode, rejects_out)
-    out = dict(dw)
-    if "book_titles" in oltp_delta:
-        out["dim_book"] = insert_new_dim_books(out["dim_book"],
-                                               oltp_delta["book_titles"])
-    if "members" in oltp_delta:
-        out["dim_members"] = insert_new_dim_members(
-            out["dim_members"], oltp_delta["members"], as_of)
-    if "suppliers" in oltp_delta:
-        out["dim_suppliers"] = insert_new_dim_suppliers(
-            out["dim_suppliers"], oltp_delta["suppliers"])
+    out = insert_dim_deltas(dw, oltp_delta, as_of)
 
     if "sales_details" in oltp_delta:
         delta = load_fact_sales(

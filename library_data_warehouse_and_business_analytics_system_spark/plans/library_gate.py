@@ -553,7 +553,7 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Partition-scoped MERGE (VERDICT r6 item 3) under the driver hash:
-# the Spark side RUNS tx_write_parts → tx_merge_parts → tx_read_parts
+# the Spark side RUNS tx_write_parts → tx_merge_parts → tx_read
 # against a real partitioned txlog table — the copy-on-write path that
 # rewrites ONLY the partitions the delta touches (the reference's
 # key-scoped MERGE, 07_SubsequentLoading.sql:331-355, at format
@@ -604,7 +604,7 @@ def merge_parts_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.text import md5_bucket
     from ..sources.catalog import load_table
-    from ..sources.txlog import tx_merge_parts, tx_read_parts, tx_write_parts
+    from ..sources.txlog import tx_merge_parts, tx_read, tx_write_parts
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.year("o_orderdate").alias("o_year"),
@@ -627,7 +627,7 @@ def merge_parts_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched = (orders.where(bkt.isin(0, 1, 2)).select("o_orderkey")
                .unionByName(ins.select("o_orderkey")))
     return (
-        tx_read_parts(spark, t)
+        tx_read(spark, t)
         .join(F.broadcast(touched), "o_orderkey", "left_semi")
         .select("o_orderkey", F.col("o_year").cast("int").alias("o_year"),
                 "o_custkey",

@@ -700,7 +700,7 @@ def optimize_zorder_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.txlog import (
         tx_optimize_parts,
-        tx_read_parts,
+        tx_read,
         tx_write_parts,
     )
 
@@ -713,7 +713,7 @@ def optimize_zorder_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     tx_write_parts(orders, t, "o_year", mode="overwrite")
     tx_optimize_parts(spark, t, "o_year", ["o_custkey", "tp"], n_files=8)
     return (
-        tx_read_parts(spark, t)
+        tx_read(spark, t)
         .groupBy("o_year")
         .agg(F.count(F.lit(1)).alias("n_orders"),
              F.countDistinct("o_custkey").alias("n_custs"),
@@ -1045,9 +1045,7 @@ def warehouse_consistent_read(spark: SparkSession, sf_dir: str) -> DataFrame:
              f"{root}/dim_customer", mode="overwrite")
     tx_write(orders.filter(F.col("o_year") >= 1998),
              f"{root}/fact_orders", mode="append")
-    snap = read_consistent(spark, root,
-                           plain=["dim_customer", "fact_orders"],
-                           partitioned=[])
+    snap = read_consistent(spark, root, ["dim_customer", "fact_orders"])
     return (
         snap["fact_orders"]
         .join(snap["dim_customer"],
@@ -1415,7 +1413,7 @@ def parts_skipping_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..sources.skipping import tx_read_parts_pruned, tx_write_parts_stats
+    from ..sources.skipping import tx_read_pruned, tx_write_parts_stats
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1430,8 +1428,8 @@ def parts_skipping_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             orders.filter(F.floor((F.col("o_month") - 1) / 3) == q),
             t, "o_year", ["o_month"])
     return (
-        tx_read_parts_pruned(spark, t, "o_month", lo=4, hi=6,
-                             part_values=["1996"])
+        tx_read_pruned(spark, t, "o_month", lo=4, hi=6,
+                       part_values=["1996"])
         .groupBy("o_year", "o_month")
         .agg(F.count(F.lit(1)).alias("n_orders"),
              F.round(F.sum("tp"), 2).cast("double").alias("total_price"))
@@ -1572,7 +1570,7 @@ def orders_maintenance_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         tx_checkpoint,
         tx_expire_checkpoints,
         tx_merge_parts,
-        tx_read_parts,
+        tx_read,
         tx_truncate_log,
         tx_vacuum,
         tx_write_parts,
@@ -1601,7 +1599,7 @@ def orders_maintenance_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rewrite), so deferring cleanup to atexit accumulated copies
     # across bench iterations. atexit stays as crash cover.
     agg = (
-        tx_read_parts(spark, t)
+        tx_read(spark, t)
         .groupBy("o_year")
         .agg(F.count(F.lit(1)).alias("n_orders"),
              F.round(F.sum(F.col("tp").cast("decimal(18,4)")), 2)

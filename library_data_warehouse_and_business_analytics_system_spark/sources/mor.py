@@ -42,8 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .txlog import (
-    _DATA, _entries, _latest_checkpoint, _publish, _replay_fold,
-    tx_latest_id,
+    _DATA, _entries, _latest_checkpoint, _LiveDeletes, _prestage, _publish,
+    _replay_fold, _visible, tx_latest_id,
 )
 
 
@@ -55,10 +55,9 @@ def tx_delete_keys(keys_df: DataFrame, table: str,
     commits as deleted. Stages only the key values — O(deleted keys)
     bytes, never O(table). ``txn_id`` gives the same redelivery
     idempotence as ``tx_write``."""
-    if txn_id is not None:
-        for e in _entries(table):
-            if e.get("txn") == txn_id:
-                return e["id"]
+    done = _prestage(table, txn_id, None, "tx_delete_keys")
+    if done is not None:
+        return done
     stage = f"{_DATA}/{uuid.uuid4().hex}"
     (keys_df.select(*key_cols).distinct()
      .write.parquet(str(Path(table) / stage)))
@@ -70,20 +69,14 @@ def tx_delete_keys(keys_df: DataFrame, table: str,
 def _mor_state(table: str, as_of: int | None):
     """Replay to (data_dirs [(id, dir)], deletes [(id, dir, keys)]).
     A checkpoint (always delete-free: tx_checkpoint raises on live
-    deletes) seeds the data side at the checkpoint id."""
+    deletes) seeds the data side at the checkpoint id; the fold skips
+    ``meta`` commits and rejects partitioned ones."""
     cp = _latest_checkpoint(table, as_of)
     base = cp["id"] if cp else 0
-    entries = [e for e in _entries(table) if e["id"] > base]
     init = ([(base, d) for d in cp["dirs"]] if cp else [], [])
 
     def apply(state, e):
         data, dels = state
-        if e["mode"] == "meta":
-            return state          # stats/bloom registration: no data
-        if "parts" in e:
-            raise ValueError(
-                f"{table}: partitioned commit {e['id']} in a "
-                "merge-on-read replay")
         if e["mode"] == "delete":
             return data, dels + [(e["id"], e["dir"], tuple(e["keys"]))]
         if e["mode"] == "overwrite":
@@ -93,7 +86,8 @@ def _mor_state(table: str, as_of: int | None):
             return [(e["id"], d) for d in dirs], []
         return data + [(e["id"], e["dir"])], dels
 
-    return _replay_fold(base, init, entries, table, as_of, apply)
+    return _replay_fold(base, init, _entries(table), table, as_of, apply,
+                        "unpartitioned")
 
 
 def tx_read_mor(spark: SparkSession, table: str,
@@ -133,15 +127,11 @@ def tx_has_live_deletes(table: str) -> bool:
     ``tx_checkpoint`` refuse and ``tx_compact_deletes`` is required.
     Metadata-only (log replay, no data touched); False for
     partitioned tables (the MoR path is plain-table only)."""
-    from .txlog import _is_partitioned
-
     try:
-        if _is_partitioned(table):
-            return False
-    except FileNotFoundError:
-        return False
-    _, dels = _mor_state(table, None)
-    return bool(dels)
+        _visible(table)
+    except _LiveDeletes:
+        return True
+    return False
 
 
 def tx_compact_deletes(spark: SparkSession, table: str,

@@ -1,14 +1,20 @@
 """File-level column statistics + data skipping for txlog tables —
 Delta's per-file min/max stats, at commit-dir granularity.
 
-Partitioned tables already prune at metadata level by partition
-value (``tx_read_parts(part_values=...)``). This module gives
-UNPARTITIONED tables the same property for any column with a natural
-write-time clustering (ingest date, monotone ids): the commit entry
-carries per-dir ``{col: [min, max]}`` harvested from the PARQUET
-FOOTERS of the staged files — a metadata-only pass, no second scan
-of the data — and a pruned read lists only the dirs whose range
-intersects the predicate.
+Every reader here resolves its snapshot through txlog's one state
+model (``_snapshot_dirs``: the visible dirs of a plain or partitioned
+table, optionally pruned to ``part_values`` at metadata level) and
+looks registrations up in one dir-keyed metadata fold
+(``txlog._dir_meta``). Stats give any column with a natural
+write-time clustering (ingest date, monotone ids) the pruning that
+partition values give the partition column: the commit entry carries
+per-dir ``{col: [min, max]}`` harvested from the PARQUET FOOTERS of
+the staged files — a metadata-only pass, no second scan of the data —
+and a pruned read opens only the dirs whose range intersects the
+predicate. On a partitioned table both tiers compose: partition
+values drop whole partitions, per-dir stats drop append generations
+inside the kept ones (a year partition accumulating one dir per day;
+a "last 7 days" predicate opens 7 of 365 dirs).
 
 Scale: a 100 TB fact appended daily for 3 years is ~1000 commit
 dirs; a "last 7 days" query must open 7, not 1000. Parquet's own
@@ -54,7 +60,10 @@ from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
-from .txlog import _DATA, _entries, _latest_checkpoint, _publish, _replay
+from .txlog import (
+    _DATA, _PART_MODES, _dir_meta, _partitions, _prestage, _publish,
+    _snapshot_dirs, _stage_parts, _visible, tx_latest_id,
+)
 
 _TYPES = (int, float, str)
 
@@ -131,10 +140,9 @@ def tx_write_stats(df: DataFrame, table: str, stats_cols: list[str],
 
     if mode not in ("append", "overwrite"):
         raise ValueError(f"tx_write_stats: unknown mode {mode!r}")
-    if txn_id is not None:
-        for e in _entries(table):
-            if e.get("txn") == txn_id:
-                return e["id"]
+    done = _prestage(table, txn_id, expect_latest, "tx_write_stats")
+    if done is not None:
+        return done
     stage = f"{_DATA}/{_uuid.uuid4().hex}"
     df.write.parquet(str(Path(table) / stage))
     stats = _footer_stats(Path(table) / stage, stats_cols)
@@ -144,63 +152,78 @@ def tx_write_stats(df: DataFrame, table: str, stats_cols: list[str],
     return _publish(table, payload, max_retries, txn_id, expect_latest)
 
 
-def _dir_stats(table: str) -> dict[str, dict]:
-    """dir → stats map: the latest checkpoint's carried registrations
-    (tx_checkpoint folds live dirs' stats into its payload, so
-    truncation no longer strips them), write-path ``stats`` entries,
-    and ``meta`` refresh commits' ``dirstats`` — newest wins. Dirs
-    with no registration anywhere simply never prune."""
-    out: dict[str, dict] = {}
-    cp = _latest_checkpoint(table)
-    if cp:
-        out.update(cp.get("dirstats", {}))
-    for e in sorted(_entries(table), key=lambda x: x["id"]):
-        if "stats" in e and "dir" in e:
-            out[e["dir"]] = e["stats"]
-        out.update(e.get("dirstats", {}))
-    return out
+def tx_write_parts_stats(df: DataFrame, table: str, part_col: str,
+                         stats_cols: list[str], mode: str = "append",
+                         max_retries: int = 10,
+                         txn_id: str | None = None,
+                         expect_latest: int | None = None) -> int:
+    """``tx_write_parts`` that additionally records per-partition-dir
+    min/max for ``stats_cols`` from the staged parquet footers — the
+    second pruning tier :func:`tx_read_pruned` applies inside the
+    partitions ``part_values`` kept."""
+    if mode not in _PART_MODES:
+        raise ValueError(f"tx_write_parts_stats: unknown mode {mode!r}")
+    done = _prestage(table, txn_id, expect_latest, "tx_write_parts_stats")
+    if done is not None:
+        return done
+    parts = _stage_parts(df, table, part_col)
+    stats = {}
+    for value, d in parts.items():
+        s = _footer_stats(Path(table) / d, stats_cols)
+        if s:
+            stats[value] = s
+    payload = {"mode": _PART_MODES[mode], "pcol": part_col, "parts": parts}
+    if stats:
+        payload["pstats"] = stats
+    return _publish(table, payload, max_retries, txn_id, expect_latest)
 
 
-def tx_read_pruned(spark: SparkSession, table: str, col: str,
-                   lo=None, hi=None,
-                   as_of: int | None = None) -> DataFrame:
-    """Snapshot read of rows with ``lo <= col <= hi`` (either bound
-    optional), opening ONLY the visible dirs whose recorded [min,
-    max] intersects the bound — dirs without stats are always read
-    (never wrongly skipped). The residual per-row filter is applied
-    on top, so the result is exactly the filtered snapshot."""
-    cp = _latest_checkpoint(table, as_of)
-    base = cp["id"] if cp else 0
-    entries = [e for e in _entries(table) if e["id"] > base]
-    dirs = _replay(cp, entries, table, as_of)
-    if not dirs:
-        raise FileNotFoundError(f"tx_read_pruned: no commits in {table}")
-    stats = _dir_stats(table)
-    keep = []
-    for d in dirs:
-        s = stats.get(d, {}).get(col)
-        if s is None:
-            keep.append(d)
-            continue
-        dmin, dmax = _decode(s[0]), _decode(s[1])
-        if lo is not None and dmax < lo:
-            continue
-        if hi is not None and dmin > hi:
-            continue
-        keep.append(d)
+def _read_kept(spark: SparkSession, table: str, dirs: list[str],
+               keep: list[str], cond: Column | None) -> DataFrame:
+    """Read the ``keep`` subset of a snapshot's ``dirs`` with the
+    residual row filter ``cond`` on top; when every dir was skipped,
+    an empty frame with the snapshot's schema."""
     if not keep:
-        # predicate excludes every dir: empty frame with the schema
         df = spark.read.parquet(*[str(Path(table) / d) for d in dirs])
         return df.where("1=0")
     df = spark.read.parquet(*[str(Path(table) / d) for d in keep])
+    return df.where(cond) if cond is not None else df
+
+
+def tx_read_pruned(spark: SparkSession, table: str, col: str,
+                   lo=None, hi=None, as_of: int | None = None,
+                   part_values: list[str] | None = None) -> DataFrame:
+    """Snapshot read of rows with ``lo <= col <= hi`` (either bound
+    optional), opening ONLY the visible dirs whose recorded [min,
+    max] intersects the bound — dirs without stats are always read
+    (never wrongly skipped). On a partitioned table ``part_values``
+    first prunes to those partitions (metadata only), so both tiers
+    compose. The residual per-row filter is applied on top, so the
+    result is exactly the filtered snapshot."""
     from pyspark.sql import functions as F
+
+    dirs = _snapshot_dirs(table, as_of, part_values)
+    if not dirs:
+        raise FileNotFoundError(
+            f"tx_read_pruned: no visible data in {table}")
+    stats, _ = _dir_meta(table, dirs)
+    keep = []
+    for d in dirs:
+        s = stats.get(d, {}).get(col)
+        if s is not None:
+            dmin, dmax = _decode(s[0]), _decode(s[1])
+            if lo is not None and dmax < lo:
+                continue
+            if hi is not None and dmin > hi:
+                continue
+        keep.append(d)
     cond: Column | None = None
     if lo is not None:
         cond = F.col(col) >= F.lit(lo)
     if hi is not None:
         c2 = F.col(col) <= F.lit(hi)
         cond = c2 if cond is None else cond & c2
-    return df.where(cond) if cond is not None else df
+    return _read_kept(spark, table, dirs, keep, cond)
 
 
 # ---------------------------------------------------------------------------
@@ -286,19 +309,15 @@ def tx_write_bloom(df: DataFrame, table: str, bloom_cols: list[str],
     min/max stats via ``stats_cols``."""
     import uuid as _uuid
 
-    import pyarrow.parquet as pq
-
     if mode not in ("append", "overwrite"):
         raise ValueError(f"tx_write_bloom: unknown mode {mode!r}")
-    if txn_id is not None:
-        for e in _entries(table):
-            if e.get("txn") == txn_id:
-                return e["id"]
+    done = _prestage(table, txn_id, expect_latest, "tx_write_bloom")
+    if done is not None:
+        return done
     stage = f"{_DATA}/{_uuid.uuid4().hex}"
     stage_path = Path(table) / stage
     df.write.parquet(str(stage_path))
-    n_rows = sum(pq.ParquetFile(f).metadata.num_rows
-                 for f in stage_path.rglob("*.parquet"))
+    n_rows = _footer_rows(table, [stage])
     spark = df.sparkSession
     payload: dict = {"mode": mode, "dir": stage}
     blooms = {c: _build_bloom_sidecar(spark, stage_path, c, n_rows, fpp)
@@ -343,187 +362,49 @@ def tx_read_point(spark: SparkSession, table: str, col: str, value,
     correctness."""
     from pyspark.sql import functions as F
 
-    cp = _latest_checkpoint(table, as_of)
-    base = cp["id"] if cp else 0
-    entries = [e for e in _entries(table) if e["id"] > base]
-    dirs = _replay(cp, entries, table, as_of)
+    dirs = _snapshot_dirs(table, as_of)
     if not dirs:
-        raise FileNotFoundError(f"tx_read_point: no commits in {table}")
-    blooms: dict[str, dict] = {}
-    if cp:
-        for d, b in cp.get("dirbloom", {}).items():
-            if col in b:
-                blooms[d] = b[col]
-    for e in sorted(_entries(table), key=lambda x: x["id"]):
-        if "bloom" in e and "dir" in e and col in e["bloom"]:
-            blooms[e["dir"]] = e["bloom"][col]
-        for d, b in e.get("dirbloom", {}).items():
-            if col in b:
-                blooms[d] = b[col]
+        raise FileNotFoundError(f"tx_read_point: no visible data in {table}")
+    _, blooms = _dir_meta(table, dirs)
     keep = [d for d in dirs
-            if d not in blooms
-            or _bloom_might_contain(table, d, col, blooms[d], value)]
-    if not keep:
-        df = spark.read.parquet(*[str(Path(table) / d) for d in dirs])
-        return df.where("1=0")
-    df = spark.read.parquet(*[str(Path(table) / d) for d in keep])
-    return df.where(F.col(col) == F.lit(value))
+            if col not in blooms.get(d, {})
+            or _bloom_might_contain(table, d, col, blooms[d][col], value)]
+    return _read_kept(spark, table, dirs, keep, F.col(col) == F.lit(value))
 
 
 # ---------------------------------------------------------------------------
 # Metadata-only COUNT(*).
 
 
-def tx_count(spark: SparkSession, table: str,
-             as_of: int | None = None) -> int:
-    """COUNT(*) of a plain-table snapshot WITHOUT scanning any data:
-    the visible dirs' parquet footers carry exact row counts (what
-    lets Delta answer SELECT COUNT(*) from stats). Equality deletes
-    make footer counts wrong, but the plain replay already raises on
-    live MoR deletes, so a returned count is always exact. Cost:
-    one footer read per file — O(files), zero data bytes."""
+def _footer_rows(table: str, dirs: list[str]) -> int:
     import pyarrow.parquet as pq
 
-    cp = _latest_checkpoint(table, as_of)
-    base = cp["id"] if cp else 0
-    entries = [e for e in _entries(table) if e["id"] > base]
-    dirs = _replay(cp, entries, table, as_of)
+    return sum(pq.ParquetFile(f).metadata.num_rows
+               for d in dirs for f in (Path(table) / d).rglob("*.parquet"))
+
+
+def tx_count(spark: SparkSession, table: str,
+             as_of: int | None = None) -> int:
+    """COUNT(*) of a snapshot WITHOUT scanning any data: the visible
+    dirs' parquet footers carry exact row counts (what lets Delta
+    answer SELECT COUNT(*) from stats). Equality deletes make footer
+    counts wrong, but the replay already raises on live MoR deletes,
+    so a returned count is always exact. Cost: one footer read per
+    file — O(files), zero data bytes."""
+    dirs = _snapshot_dirs(table, as_of)
     if not dirs:
-        raise FileNotFoundError(f"tx_count: no commits in {table}")
-    total = 0
-    for d in dirs:
-        for f in (Path(table) / d).rglob("*.parquet"):
-            total += pq.ParquetFile(f).metadata.num_rows
-    return total
+        raise FileNotFoundError(f"tx_count: no visible data in {table}")
+    return _footer_rows(table, dirs)
 
 
 def tx_count_parts(spark: SparkSession, table: str,
                    as_of: int | None = None,
                    part_values: list[str] | None = None) -> dict[str, int]:
-    """Partitioned twin of :func:`tx_count`: per-partition exact row
-    counts from footers (optionally restricted to ``part_values``),
-    zero data bytes. Returns {partition value: rows}."""
-    import pyarrow.parquet as pq
-
-    from .txlog import _visible_parts
-
-    state = _visible_parts(table, as_of)
-    if part_values is not None:
-        state = {v: ds for v, ds in state.items() if v in part_values}
-    out: dict[str, int] = {}
-    for v, ds in state.items():
-        n = 0
-        for d in ds:
-            for f in (Path(table) / d).rglob("*.parquet"):
-                n += pq.ParquetFile(f).metadata.num_rows
-        out[v] = n
-    return out
-
-
-# ---------------------------------------------------------------------------
-# Stats skipping for PARTITIONED tables: per-(partition, dir) min/max
-# in the commit entry. Partition values already prune at metadata
-# level; this adds SECOND-column pruning WITHIN a partition across
-# its append generations — the daily-append case (a year partition
-# accumulates one dir per day; a "last 7 days" predicate on the date
-# column opens 7 of 365 dirs inside the year, plus the partition
-# pruning that already dropped the other years).
-
-
-def tx_write_parts_stats(df: DataFrame, table: str, part_col: str,
-                         stats_cols: list[str], mode: str = "append",
-                         max_retries: int = 10,
-                         txn_id: str | None = None,
-                         expect_latest: int | None = None) -> int:
-    """``tx_write_parts`` that additionally records per-partition-dir
-    min/max for ``stats_cols`` from the staged parquet footers."""
-    from .txlog import TxConflict, _stage_parts, tx_latest_id
-
-    modes = {"append": "append_parts", "overwrite": "overwrite_parts",
-             "replace": "replace_parts"}
-    if mode not in modes:
-        raise ValueError(f"tx_write_parts_stats: unknown mode {mode!r}")
-    if txn_id is not None:
-        for e in _entries(table):
-            if e.get("txn") == txn_id:
-                return e["id"]
-    if expect_latest is not None and tx_latest_id(table) != expect_latest:
-        raise TxConflict(
-            f"tx_write_parts_stats: {table} is at commit "
-            f"{tx_latest_id(table)}, not the expected {expect_latest}")
-    parts = _stage_parts(df, table, part_col)
-    stats = {}
-    for value, d in parts.items():
-        s = _footer_stats(Path(table) / d, stats_cols)
-        if s:
-            stats[value] = s
-    payload = {"mode": modes[mode], "pcol": part_col, "parts": parts}
-    if stats:
-        payload["pstats"] = stats
-    return _publish(table, payload, max_retries, txn_id, expect_latest)
-
-
-def _part_dir_stats(table: str) -> dict[str, dict]:
-    """(staged dir) → stats: checkpoint-carried registrations,
-    write-path ``pstats`` maps, and ``meta`` refresh commits'
-    ``dirstats`` — newest wins."""
-    out: dict[str, dict] = {}
-    cp = _latest_checkpoint(table)
-    if cp:
-        out.update(cp.get("dirstats", {}))
-    for e in sorted(_entries(table), key=lambda x: x["id"]):
-        if "pstats" in e and "parts" in e:
-            for value, d in e["parts"].items():
-                if isinstance(d, str) and value in e["pstats"]:
-                    out[d] = e["pstats"][value]
-        out.update(e.get("dirstats", {}))
-    return out
-
-
-def tx_read_parts_pruned(spark: SparkSession, table: str, col: str,
-                         lo=None, hi=None,
-                         part_values: list[str] | None = None,
-                         as_of: int | None = None) -> DataFrame:
-    """Partitioned snapshot read with BOTH pruning tiers: partition
-    values (metadata) and per-dir [min, max] on ``col`` (footer stats
-    recorded at write). Dirs without stats are always read; the
-    residual row filter runs on top, so the result is exactly the
-    filtered snapshot."""
-    from pyspark.sql import functions as F
-
-    from .txlog import _visible_parts
-
-    state = _visible_parts(table, as_of)
-    if part_values is not None:
-        state = {v: ds for v, ds in state.items() if v in part_values}
-    all_dirs = [d for ds in state.values() for d in ds]
-    if not all_dirs:
-        raise FileNotFoundError(
-            f"tx_read_parts_pruned: no visible partitions in {table}")
-    stats = _part_dir_stats(table)
-    keep = []
-    for d in all_dirs:
-        s = stats.get(d, {}).get(col)
-        if s is None:
-            keep.append(d)
-            continue
-        dmin, dmax = _decode(s[0]), _decode(s[1])
-        if lo is not None and dmax < lo:
-            continue
-        if hi is not None and dmin > hi:
-            continue
-        keep.append(d)
-    if not keep:
-        df = spark.read.parquet(*[str(Path(table) / d) for d in all_dirs])
-        return df.where("1=0")
-    df = spark.read.parquet(*[str(Path(table) / d) for d in keep])
-    cond = None
-    if lo is not None:
-        cond = F.col(col) >= F.lit(lo)
-    if hi is not None:
-        c2 = F.col(col) <= F.lit(hi)
-        cond = c2 if cond is None else cond & c2
-    return df.where(cond) if cond is not None else df
+    """Per-partition :func:`tx_count` of a partitioned table
+    (optionally restricted to ``part_values``), zero data bytes.
+    Returns {partition value: rows}."""
+    state = _partitions(_visible(table, as_of), table, part_values)
+    return {v: _footer_rows(table, ds) for v, ds in state.items()}
 
 
 # ---------------------------------------------------------------------------
@@ -552,17 +433,8 @@ def tx_refresh_stats(spark: SparkSession, table: str,
     latest id when there was nothing to register)."""
     import json as _json
 
-    import pyarrow.parquet as pq
-
-    from .txlog import _is_partitioned, _visible_dirs, _visible_parts, \
-        tx_latest_id
-
     latest = tx_latest_id(table)
-    if _is_partitioned(table):
-        state = _visible_parts(table, as_of=latest)
-        dirs = [d for ds in state.values() for d in ds]
-    else:
-        dirs = _visible_dirs(table, as_of=latest)
+    dirs = _snapshot_dirs(table, as_of=latest)
 
     # Per-dir work fans out on a driver thread pool: footer harvesting
     # is tiny pyarrow metadata I/O, and each missing bloom is one small
@@ -600,8 +472,7 @@ def tx_refresh_stats(spark: SparkSession, table: str,
                         continue
                     except (OSError, ValueError, KeyError):
                         pass  # unreadable: rebuild below
-                n_rows = sum(pq.ParquetFile(f).metadata.num_rows
-                             for f in dpath.rglob("*.parquet"))
+                n_rows = _footer_rows(table, [d])
                 per_col[c] = _build_bloom_sidecar(spark, dpath, c,
                                                   n_rows, fpp)
             return d, per_col

@@ -12,18 +12,32 @@ for single-writer-per-commit workloads:
 Layout::
 
     table/
-      data/<uuid>/part-*.parquet               (immutable once logged)
+      data/<uuid>/part-*.parquet               (plain: immutable once logged)
+      data/<uuid>/_part=<escaped value>/…      (partitioned)
       _txlog/00000001.json … 0000000N.json     (one file per commit)
+      _txlog/checkpoints/<id>.json             (compacted visible state)
 
-- WRITE: stage the data directory first, then publish it by creating
-  ``_txlog/<next-id>.json`` with ``open(..., 'x')`` — an ATOMIC
-  exclusive create. A crash before the log create leaves an orphaned
+One state model covers both layouts. A snapshot is a map
+``{partition value → [data dirs]}``: a partitioned table has one key
+per partition value, a plain table exactly one key, ``None``, which no
+partition value can take (values are non-null strings). The replay
+(:func:`_replay`), the snapshot resolver (:func:`_visible`), the reader
+(:func:`tx_read`, ``part_values`` prunes partitions from metadata
+alone), the skipping readers and restore/clone/materialize all work on
+that map; only the log entries keep layout-specific keys (``dir`` /
+``dirs`` vs ``parts``), so tables written before stay readable. One
+table never mixes layouts — the replay raises if it finds both.
+
+- WRITE: stage the data directory first, then publish it by linking a
+  fully-written temp file to ``_txlog/<next-id>.json`` — an ATOMIC
+  exclusive create. A crash before the link leaves an orphaned
   (invisible) data dir; a concurrent committer losing the race gets
   ``FileExistsError`` and retries with the next id (optimistic
   concurrency, exactly Delta's protocol).
-- READ: replay the log in id order; an ``overwrite`` entry resets the
-  visible set, an ``append`` adds to it. Readers never list ``data/``
-  — only logged dirs — so staged/orphaned writes cannot leak.
+- READ: replay the log in id order on top of the newest checkpoint; an
+  overwrite resets the visible map, an append adds a dir, a partition
+  replace swaps only the named partitions' dirs. Readers never list
+  ``data/`` — only logged dirs — so staged/orphaned writes cannot leak.
 - VACUUM: delete UNREFERENCED data dirs (staged-then-crashed orphans)
   older than a retention window. Every LOGGED dir is kept — time
   travel needs it — and the retention window protects a dir another
@@ -49,11 +63,15 @@ import shutil
 import time
 import uuid
 from pathlib import Path
+from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
 _LOG = "_txlog"
 _DATA = "data"
+_PART = "_part"
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+_PLAIN = None   # the single state key of an unpartitioned table
 
 
 def _log_dir(table: str) -> Path:
@@ -95,9 +113,19 @@ class TxConflict(RuntimeError):
     what Delta raises as ConcurrentAppendException)."""
 
 
+class _LiveDeletes(ValueError):
+    """A plain snapshot still carries merge-on-read delete commits."""
+
+
+def _layout(obj: dict) -> str:
+    return "partitioned" if "parts" in obj else "unpartitioned"
+
+
 def _replay_fold(base_id: int, state, entries: list[dict], table: str,
-                 as_of: int | None, apply):
-    """Fold ``apply(state, entry)`` over the log in id order.
+                 as_of: int | None, apply, layout: str | None):
+    """Fold ``apply(state, entry)`` over the log's data commits in id
+    order. ``meta`` commits (stats/bloom registrations) carry no data
+    and are skipped; every other commit must have ``layout``.
 
     Replay must be CONTIGUOUS from the checkpoint (ADVICE r6): each
     applied entry's id must be exactly predecessor+1. A gap means
@@ -116,8 +144,14 @@ def _replay_fold(base_id: int, state, entries: list[dict], table: str,
                 f"and {e['id'] - 1} was truncated and no checkpoint "
                 "covers "
                 + (f"as_of={as_of}" if as_of is not None else "this read"))
-        state = apply(state, e)
         prev = e["id"]
+        if e["mode"] == "meta":
+            continue
+        if _layout(e) != layout:
+            raise ValueError(
+                f"{table}: commit {e['id']} is {_layout(e)} but the "
+                f"table is {layout} (a txlog table keeps one layout)")
+        state = apply(state, e)
     if as_of is not None and prev < as_of:
         # Replay stopped short of as_of. Fine when history simply ends
         # at `prev`; an error when NEWER history provably existed (a
@@ -134,98 +168,139 @@ def _replay_fold(base_id: int, state, entries: list[dict], table: str,
     return state
 
 
-def _replay(cp: dict | None, entries: list[dict], table: str,
-            as_of: int | None = None) -> list[str]:
-    """Visible data dirs of an UNPARTITIONED table (checkpoint state
-    plus contiguous log replay)."""
-    live_delete = [0]   # id of a delete no later overwrite superseded
+def _encode(state: dict) -> dict:
+    """The on-disk keys of a visible state (checkpoint body, reset
+    commit): ``dirs`` for a plain table, ``parts`` for a partitioned
+    one."""
+    return {"dirs": state[_PLAIN]} if _PLAIN in state else {"parts": state}
 
-    def apply(dirs: list[str], e: dict) -> list[str]:
-        if e["mode"] == "meta":
-            # stats/bloom registration for EXISTING dirs (skipping.
-            # tx_refresh_stats) — carries no data, visible state
-            # unchanged
-            return dirs
+
+def _replay(cp: dict | None, entries: list[dict], table: str,
+            as_of: int | None = None) -> dict:
+    """Visible state ``{partition value → [dirs]}`` (``{None: dirs}``
+    for a plain table): checkpoint state plus contiguous log replay.
+
+    The layout is the checkpoint's, else the first data commit's.
+    Plain modes: ``overwrite`` resets the table to its ``dir`` (or, for
+    tx_restore / tx_clone, its ``dirs`` list), ``append`` adds a dir,
+    ``delete`` is a merge-on-read equality delete. Partitioned modes:
+    ``overwrite_parts`` resets the whole table to the entry's
+    partitions (a value may be a LIST of dirs — restore/clone reset to
+    a multi-generation state by reference), ``append_parts`` appends
+    each partition's dir, ``replace_parts`` swaps ONLY the named
+    partitions' dirs and carries every other partition forward by
+    reference — the copy-on-write granularity a partition-scoped MERGE
+    needs (VERDICT r6 item 3). A ``null`` dir in a ``replace_parts``
+    payload marks the partition EMPTIED by the commit (every row
+    deleted — a CDC delete batch can do this); replay resets it to no
+    dirs instead of carrying stale ones."""
+    base = cp["id"] if cp else 0
+    data = [e for e in entries if e["id"] > base and e["mode"] != "meta"]
+    first = cp or min(data, key=lambda e: e["id"], default=None)
+    layout = _layout(first) if first else None
+    if cp:
+        state = ({_PLAIN: list(cp["dirs"])} if "dirs" in cp else
+                 {v: list(ds) for v, ds in cp["parts"].items()})
+    else:
+        state = {_PLAIN: []} if layout == "unpartitioned" else {}
+    live_delete = 0   # id of a delete no later overwrite superseded
+
+    def apply(state: dict, e: dict) -> dict:
+        nonlocal live_delete
+        if e["mode"] == "overwrite_parts":
+            return {v: (list(d) if isinstance(d, list) else [d])
+                    for v, d in e["parts"].items()}
         if "parts" in e:
-            raise ValueError(
-                f"{table}: partitioned commit {e['id']} in an "
-                "unpartitioned replay — read it with tx_read_parts")
+            out = dict(state)
+            for v, d in e["parts"].items():
+                if e["mode"] == "append_parts":
+                    if d is None:
+                        raise ValueError(
+                            f"{table}: null dir in append_parts commit "
+                            f"{e['id']}")
+                    out[v] = out.get(v, []) + [d]
+                else:                      # replace_parts
+                    out[v] = [d] if d is not None else []
+            return out
         if e["mode"] == "delete":
             # provisionally skip; poisonous only if still live at the
             # end of the replay (a later overwrite resets the table,
             # making the delete irrelevant to this snapshot)
-            live_delete[0] = e["id"]
-            return dirs
-        if "dirs" in e:           # multi-dir reset: tx_restore / tx_clone
-            if e["mode"] != "overwrite":
-                raise ValueError(
-                    f"{table}: multi-dir commit {e['id']} must be an "
-                    "overwrite")
-            live_delete[0] = 0
-            return list(e["dirs"])
+            live_delete = e["id"]
+            return state
         if e["mode"] == "overwrite":
-            live_delete[0] = 0
-            return [e["dir"]]
-        return dirs + [e["dir"]]
-    out = _replay_fold(cp["id"] if cp else 0,
-                       list(cp["dirs"]) if cp else [],
-                       entries, table, as_of, apply)
-    if live_delete[0]:
-        raise ValueError(
-            f"{table}: merge-on-read delete commit {live_delete[0]} is "
+            live_delete = 0
+            return {_PLAIN: list(e["dirs"]) if "dirs" in e else [e["dir"]]}
+        if "dirs" in e:
+            raise ValueError(
+                f"{table}: multi-dir commit {e['id']} must be an "
+                "overwrite")
+        return {_PLAIN: state[_PLAIN] + [e["dir"]]}
+
+    state = _replay_fold(base, state, entries, table, as_of, apply, layout)
+    if live_delete:
+        raise _LiveDeletes(
+            f"{table}: merge-on-read delete commit {live_delete} is "
             "live in this snapshot — read with mor.tx_read_mor (or "
             "tx_compact_deletes first); tx_read/tx_checkpoint would "
             "resurrect the deleted rows")
-    return out
+    return state
 
 
-def _replay_parts(cp: dict | None, entries: list[dict], table: str,
-                  as_of: int | None = None) -> dict[str, list[str]]:
-    """Visible state of a PARTITIONED table: partition value → list of
-    data dirs. Entry modes: ``overwrite_parts`` resets the whole
-    table to the entry's partitions, ``append_parts`` appends each
-    partition's dir, ``replace_parts`` swaps ONLY the named
-    partitions' dirs and carries every other partition forward by
-    reference — the copy-on-write granularity a partition-scoped
-    MERGE needs (VERDICT r6 item 3). A ``null`` dir in a
-    ``replace_parts`` payload marks the partition EMPTIED by the
-    commit (every row deleted — a CDC delete batch can do this);
-    replay resets it to no dirs instead of carrying stale ones."""
-    def apply(parts: dict[str, list[str]], e: dict):
-        if e["mode"] == "meta":
-            return parts          # stats/bloom registration: no data
-        if "parts" not in e:
-            raise ValueError(
-                f"{table}: unpartitioned commit {e['id']} in a "
-                "partitioned replay — read it with tx_read")
-        if e["mode"] == "overwrite_parts":
-            # a value may be a LIST of dirs: tx_restore / tx_clone
-            # reset the table to a prior multi-generation state by
-            # reference instead of rewriting it
-            return {v: (list(d) if isinstance(d, list) else [d])
-                    for v, d in e["parts"].items()}
-        out = dict(parts)
-        for v, d in e["parts"].items():
-            if e["mode"] == "append_parts":
-                if d is None:
-                    raise ValueError(
-                        f"{table}: null dir in append_parts commit "
-                        f"{e['id']}")
-                out[v] = out.get(v, []) + [d]
-            else:                      # replace_parts
-                out[v] = [d] if d is not None else []
-        return out
-    base_parts = ({v: list(ds) for v, ds in cp["parts"].items()}
-                  if cp else {})
-    return _replay_fold(cp["id"] if cp else 0, base_parts,
-                        entries, table, as_of, apply)
+def _visible(table: str, as_of: int | None = None) -> dict:
+    """The table's visible state at ``as_of`` (default: latest)."""
+    return _replay(_latest_checkpoint(table, as_of), _entries(table),
+                   table, as_of)
 
 
-def _visible_dirs(table: str, as_of: int | None = None) -> list[str]:
-    cp = _latest_checkpoint(table, as_of)
-    base = cp["id"] if cp else 0
-    entries = [e for e in _entries(table) if e["id"] > base]
-    return _replay(cp, entries, table, as_of)
+def _partitions(state: dict, table: str,
+                part_values: list[str] | None = None) -> dict:
+    """``state``'s partitions — only those in ``part_values`` when
+    given. Raises ``ValueError`` for a plain table."""
+    if _PLAIN in state:
+        raise ValueError(f"{table} is not partitioned")
+    if part_values is None:
+        return state
+    return {v: ds for v, ds in state.items() if v in part_values}
+
+
+def _snapshot_dirs(table: str, as_of: int | None = None,
+                   part_values: list[str] | None = None) -> list[str]:
+    """Visible data dirs (relative to the table root), optionally
+    pruned to ``part_values`` — metadata only, nothing is listed."""
+    state = _visible(table, as_of)
+    if part_values is not None:
+        state = _partitions(state, table, part_values)
+    return [d for ds in state.values() for d in ds]
+
+
+def _dir_meta(table: str, dirs) -> tuple[dict, dict]:
+    """(dir → stats, dir → bloom meta) for ``dirs``: the newest
+    checkpoint's carried maps, then every surviving entry in id order —
+    write-path ``stats``/``bloom`` (keyed by the entry's ``dir``),
+    ``pstats`` (keyed by each partition's staged dir) and ``meta``
+    refresh commits' ``dirstats``/``dirbloom``. Newer registrations
+    win; a dir with no registration anywhere is never skipped."""
+    stats: dict[str, dict] = {}
+    bloom: dict[str, dict] = {}
+    cp = _latest_checkpoint(table)
+    if cp:
+        stats.update(cp.get("dirstats", {}))
+        bloom.update(cp.get("dirbloom", {}))
+    for e in sorted(_entries(table), key=lambda x: x["id"]):
+        if "dir" in e:
+            if "stats" in e:
+                stats[e["dir"]] = e["stats"]
+            if "bloom" in e:
+                bloom[e["dir"]] = e["bloom"]
+        for v, d in e.get("parts", {}).items():
+            if isinstance(d, str) and v in e.get("pstats", {}):
+                stats[d] = e["pstats"][v]
+        stats.update(e.get("dirstats", {}))
+        bloom.update(e.get("dirbloom", {}))
+    keep = set(dirs)
+    return ({d: s for d, s in stats.items() if d in keep},
+            {d: b for d, b in bloom.items() if d in keep})
 
 
 def tx_latest_id(table: str) -> int:
@@ -237,6 +312,26 @@ def tx_latest_id(table: str) -> int:
     if cp:
         ids.append(cp["id"])
     return max(ids) if ids else 0
+
+
+def _prestage(table: str, txn_id: str | None, expect_latest: int | None,
+              who: str) -> int | None:
+    """Cheap checks before a writer stages any data: the id of an
+    already-published commit carrying ``txn_id`` (the write is then a
+    no-op), or :class:`TxConflict` when the table moved past
+    ``expect_latest``. ``_publish`` re-checks both on the atomic-create
+    id; failing here just skips the staging work and leaves no orphan."""
+    if txn_id is not None:
+        for e in _entries(table):
+            if e.get("txn") == txn_id:
+                return e["id"]
+    if expect_latest is not None:
+        cur = tx_latest_id(table)
+        if cur != expect_latest:
+            raise TxConflict(
+                f"{who}: {table} is at commit {cur}, not the expected "
+                f"snapshot {expect_latest}")
+    return None
 
 
 def tx_write(df: DataFrame, table: str, mode: str = "append",
@@ -260,24 +355,37 @@ def tx_write(df: DataFrame, table: str, mode: str = "append",
     so there is no list-then-publish race window."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"tx_write: unknown mode {mode!r}")
-    if txn_id is not None:
-        for e in _entries(table):
-            if e.get("txn") == txn_id:
-                return e["id"]
-    if expect_latest is not None and tx_latest_id(table) != expect_latest:
-        raise TxConflict(  # cheap pre-stage check; the loop re-checks
-            f"tx_write: {table} is at commit {tx_latest_id(table)}, "
-            f"not the expected snapshot {expect_latest}")
+    done = _prestage(table, txn_id, expect_latest, "tx_write")
+    if done is not None:
+        return done
     stage = f"{_DATA}/{uuid.uuid4().hex}"
     df.write.parquet(str(Path(table) / stage))
     return _publish(table, {"mode": mode, "dir": stage},
                     max_retries, txn_id, expect_latest)
 
 
+def _link_json(path: Path, obj) -> bool:
+    """Atomically create ``path`` holding ``obj`` as JSON; False if it
+    already exists. A bare open('x') + dump could crash BETWEEN create
+    and write, leaving a truncated file every reader then chokes on;
+    linking a fully-written temp file only ever exposes the complete
+    payload (and fails with FileExistsError for the race loser, same
+    as 'x'). Shared by commits, checkpoints and txmulti manifests."""
+    tmp = path.parent / f".{uuid.uuid4().hex}.tmp"
+    try:
+        tmp.write_text(json.dumps(obj))
+        os.link(tmp, path)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        tmp.unlink(missing_ok=True)
+
+
 def _publish(table: str, payload: dict, max_retries: int,
              txn_id: str | None, expect_latest: int | None) -> int:
     """Allocate the next commit id and atomically link the entry
-    (shared by the plain and partitioned write paths)."""
+    (shared by every write path)."""
     log = _log_dir(table)
     log.mkdir(parents=True, exist_ok=True)
     for _ in range(max_retries):
@@ -300,20 +408,9 @@ def _publish(table: str, payload: dict, max_retries: int,
         entry = {"id": cid, "ts": time.time(), **payload}
         if txn_id is not None:
             entry["txn"] = txn_id
-        # Publish = atomic link of a fully-written temp file. A bare
-        # open('x') + dump could crash BETWEEN create and write,
-        # leaving a truncated log entry every reader then chokes on;
-        # link() only ever exposes the complete payload (and raises
-        # FileExistsError to the race loser, same as 'x').
-        tmp = log / f".{uuid.uuid4().hex}.tmp"
-        tmp.write_text(json.dumps(entry))
-        try:
-            os.link(tmp, log / f"{cid:08d}.json")
+        if _link_json(log / f"{cid:08d}.json", entry):
             return cid
-        except FileExistsError:
-            continue  # lost the race — retry with the next id
-        finally:
-            tmp.unlink(missing_ok=True)
+        # lost the race — retry with the next id
     raise RuntimeError(f"tx_write: lost the commit race {max_retries} times")
 
 
@@ -351,12 +448,20 @@ def tx_version_at(table: str, ts: float) -> int:
 def tx_read(spark: SparkSession, table: str,
             as_of: int | None = None,
             as_of_ts: float | None = None,
-            merge_schema: bool = False) -> DataFrame:
-    """Snapshot read: the committed state at call time, or — with
-    ``as_of`` — the state as of that commit id (time travel; every
-    logged data dir is immutable and vacuum never touches logged
-    dirs, so historical snapshots stay readable). ``as_of_ts`` is the
-    timestamp flavor (resolved through :func:`tx_version_at`).
+            merge_schema: bool = False,
+            part_values: list[str] | None = None) -> DataFrame:
+    """Snapshot read of a plain or partitioned table: the committed
+    state at call time, or — with ``as_of`` — the state as of that
+    commit id (time travel; every logged data dir is immutable and
+    vacuum never touches logged dirs, so historical snapshots stay
+    readable). ``as_of_ts`` is the timestamp flavor (resolved through
+    :func:`tx_version_at`).
+
+    ``part_values`` prunes a PARTITIONED table's read to those
+    partitions' dirs — metadata-only partition pruning (no scan, no
+    listing of other partitions), which is what keeps a partition-
+    scoped merge's read cost proportional to the DELTA; on a plain
+    table it raises ``ValueError``.
 
     ``merge_schema=True`` unions the schemas of all visible commits
     (columns added by later appends surface as NULL on earlier
@@ -366,43 +471,16 @@ def tx_read(spark: SparkSession, table: str,
         if as_of is not None:
             raise ValueError("tx_read: pass as_of OR as_of_ts, not both")
         as_of = tx_version_at(table, as_of_ts)
-    dirs = _visible_dirs(table, as_of)
+    dirs = _snapshot_dirs(table, as_of, part_values)
     if not dirs:
         raise FileNotFoundError(
-            f"tx_read: no commits in {table}"
-            + (f" as of {as_of}" if as_of is not None else ""))
+            f"tx_read: no visible data in {table}"
+            + (f" as of {as_of}" if as_of is not None else "")
+            + (f" for {part_values}" if part_values is not None else ""))
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
     return reader.parquet(*[str(Path(table) / d) for d in dirs])
-
-
-def _live_dir_meta(cp: dict | None, entries: list[dict],
-                   live: set[str]) -> tuple[dict, dict]:
-    """(dir → stats, dir → bloom meta) surviving into a checkpoint:
-    the prior checkpoint's carried maps plus every entry's write-path
-    stats/bloom (``stats``/``bloom``/``pstats``, keyed by the staged
-    dir) and refresh registrations (``dirstats``/``dirbloom``, from
-    ``meta`` commits), restricted to the checkpointed live dirs.
-    Newer registrations win (entries fold in id order)."""
-    stats: dict[str, dict] = {}
-    bloom: dict[str, dict] = {}
-    if cp:
-        stats.update(cp.get("dirstats", {}))
-        bloom.update(cp.get("dirbloom", {}))
-    for e in sorted(entries, key=lambda x: x["id"]):
-        if "stats" in e and "dir" in e:
-            stats[e["dir"]] = e["stats"]
-        if "bloom" in e and "dir" in e:
-            bloom[e["dir"]] = e["bloom"]
-        if "pstats" in e and "parts" in e:
-            for v, d in e["parts"].items():
-                if isinstance(d, str) and v in e["pstats"]:
-                    stats[d] = e["pstats"][v]
-        stats.update(e.get("dirstats", {}))
-        bloom.update(e.get("dirbloom", {}))
-    return ({d: s for d, s in stats.items() if d in live},
-            {d: b for d, b in bloom.items() if d in live})
 
 
 def tx_checkpoint(table: str) -> int:
@@ -431,34 +509,21 @@ def tx_checkpoint(table: str) -> int:
     # would otherwise land in the checkpoint's dirs while its id stays
     # `last`, and later reads would replay that commit AGAIN on top —
     # duplicated appends / resurrected overwrites (ADVICE r6).
-    cp = _latest_checkpoint(table, last)
-    if any("parts" in e for e in entries) or (cp and "parts" in cp):
-        parts = _replay_parts(cp, entries, table, as_of=last)
-        body: dict = {"id": last, "parts": parts}
-        live = {d for ds in parts.values() for d in ds}
-    else:
-        dirs = _replay(cp, entries, table, as_of=last)
-        body = {"id": last, "dirs": dirs}
-        live = set(dirs)
+    state = _replay(_latest_checkpoint(table, last), entries, table,
+                    as_of=last)
+    body = {"id": last, **_encode(state)}
     # Carry each live dir's stats/bloom registration into the
     # checkpoint: without this, tx_truncate_log would silently strip
     # the skipping metadata of every checkpointed commit and pruning
     # would degrade to always-read after each maintenance pass.
-    dstats, dbloom = _live_dir_meta(cp, entries, live)
+    dstats, dbloom = _dir_meta(table, {d for ds in state.values()
+                                       for d in ds})
     if dstats:
         body["dirstats"] = dstats
     if dbloom:
         body["dirbloom"] = dbloom
-    payload = json.dumps(body)
-    tmp = d / f".{uuid.uuid4().hex}.tmp"
-    tmp.write_text(payload)
-    try:
-        os.link(tmp, target)  # atomic, complete-or-absent (as tx_write)
-    except FileExistsError:
-        pass  # concurrent checkpointer won; states are identical
-    finally:
-        tmp.unlink(missing_ok=True)
-    return last
+    _link_json(target, body)  # lost race: a concurrent checkpointer
+    return last               # wrote the identical state
 
 
 def tx_truncate_log(table: str) -> list[str]:
@@ -592,8 +657,6 @@ def tx_vacuum(table: str, retention_sec: float = 3600.0) -> list[str]:
     initial whole-table publish would pin every superseded partition
     generation forever.
     """
-    import time
-
     def _refs(obj: dict):
         # yields references relative to data/: "uuid" (plain) or
         # "uuid/_part=v" (partitioned)
@@ -652,8 +715,28 @@ def tx_vacuum(table: str, retention_sec: float = 3600.0) -> list[str]:
 # delta's keys instead of reloading the target (VERDICT r6 item 3:
 # a daily 0.1% delta must not rewrite a 100 TB fact).
 
-_PART = "_part"
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+_PART_MODES = {"append": "append_parts", "overwrite": "overwrite_parts",
+               "replace": "replace_parts"}
+# characters Spark's partition-path escaping replaces by %XX
+_ESCAPED = frozenset('"#%\'*/:=?\\{[]^\x7f') | {chr(i) for i in range(32)}
+
+
+def _part_dir(value: str) -> str:
+    """Dir name of partition ``value``, escaped as Spark's
+    ``partitionBy`` writes it (``a/b`` → ``_part=a%2Fb``), so a value
+    never turns into nested dirs; :func:`_list_parts` inverts it."""
+    return f"{_PART}=" + "".join(f"%{ord(c):02X}" if c in _ESCAPED else c
+                                 for c in value)
+
+
+def _list_parts(table: str, stage: str) -> dict[str, str]:
+    """{partition value: dir (relative to the table root)} of the
+    ``_part=`` subdirs of a staged dir."""
+    out: dict[str, str] = {}
+    for d in (Path(table) / stage).iterdir():
+        if d.name.startswith(f"{_PART}="):
+            out[unquote(d.name.split("=", 1)[1])] = f"{stage}/{d.name}"
+    return out
 
 
 def _stage_parts(df: DataFrame, table: str, part_col: str) -> dict[str, str]:
@@ -662,21 +745,14 @@ def _stage_parts(df: DataFrame, table: str, part_col: str) -> dict[str, str]:
     duplicated ``_part`` column, so the real column stays IN the
     files and reads need no partition-value reconstruction).
     Returns {partition value: staged dir (relative to table root)}."""
-    from urllib.parse import unquote
-
     stage = f"{_DATA}/{uuid.uuid4().hex}"
     (df.withColumn(_PART, df[part_col].cast("string"))
        .write.partitionBy(_PART).parquet(str(Path(table) / stage)))
-    out: dict[str, str] = {}
-    for d in (Path(table) / stage).iterdir():
-        if not d.name.startswith(f"{_PART}="):
-            continue
-        value = unquote(d.name.split("=", 1)[1])
-        if value == _HIVE_NULL:
-            raise ValueError(
-                f"tx_write_parts: NULL in partition column "
-                f"{part_col!r}; partition values must be non-null")
-        out[value] = f"{stage}/{d.name}"
+    out = _list_parts(table, stage)
+    if _HIVE_NULL in out:
+        raise ValueError(
+            f"tx_write_parts: NULL in partition column "
+            f"{part_col!r}; partition values must be non-null")
     return out
 
 
@@ -690,73 +766,26 @@ def tx_write_parts(df: DataFrame, table: str, part_col: str,
     partitions present in ``df`` (dynamic partition overwrite —
     Spark's ``partitionOverwriteMode=dynamic``, made atomic).
     ``txn_id`` / ``expect_latest`` behave as in :func:`tx_write`."""
-    modes = {"append": "append_parts", "overwrite": "overwrite_parts",
-             "replace": "replace_parts"}
-    if mode not in modes:
+    if mode not in _PART_MODES:
         raise ValueError(f"tx_write_parts: unknown mode {mode!r}")
-    if txn_id is not None:
-        for e in _entries(table):
-            if e.get("txn") == txn_id:
-                return e["id"]
-    if expect_latest is not None and tx_latest_id(table) != expect_latest:
-        raise TxConflict(
-            f"tx_write_parts: {table} is at commit {tx_latest_id(table)}, "
-            f"not the expected snapshot {expect_latest}")
+    done = _prestage(table, txn_id, expect_latest, "tx_write_parts")
+    if done is not None:
+        return done
     parts = _stage_parts(df, table, part_col)
     return _publish(table,
-                    {"mode": modes[mode], "pcol": part_col, "parts": parts},
+                    {"mode": _PART_MODES[mode], "pcol": part_col,
+                     "parts": parts},
                     max_retries, txn_id, expect_latest)
-
-
-def _visible_parts(table: str,
-                   as_of: int | None = None) -> dict[str, list[str]]:
-    cp = _latest_checkpoint(table, as_of)
-    base = cp["id"] if cp else 0
-    entries = [e for e in _entries(table) if e["id"] > base]
-    return _replay_parts(cp, entries, table, as_of)
 
 
 def tx_part_values(table: str, as_of: int | None = None) -> list[str]:
     """Sorted partition values with at least one visible data dir —
     commit-log metadata only, no file listing or scan. Callers that
-    prune with ``tx_read_parts(part_values=…)`` intersect their
-    candidate set with this to avoid the raise-on-empty path (e.g. an
-    IVF probe whose every probed cell happens to be empty)."""
-    return sorted(v for v, ds in _visible_parts(table, as_of).items()
-                  if ds)
-
-
-def tx_read_parts(spark: SparkSession, table: str,
-                  as_of: int | None = None,
-                  as_of_ts: float | None = None,
-                  part_values: list[str] | None = None,
-                  merge_schema: bool = False) -> DataFrame:
-    """Snapshot read of a partitioned table; ``part_values`` prunes
-    the read to those partitions' dirs — metadata-only partition
-    pruning (no scan, no listing of other partitions), which is what
-    keeps the merge's read cost proportional to the DELTA.
-    ``as_of_ts`` is timestamp time travel (see :func:`tx_version_at`).
-    ``merge_schema=True`` unions the visible generations' schemas
-    (columns added by later appends/replaces surface as NULL on older
-    generations), the partitioned twin of ``tx_read``'s evolution
-    read."""
-    if as_of_ts is not None:
-        if as_of is not None:
-            raise ValueError(
-                "tx_read_parts: pass as_of OR as_of_ts, not both")
-        as_of = tx_version_at(table, as_of_ts)
-    state = _visible_parts(table, as_of)
-    if part_values is not None:
-        state = {v: ds for v, ds in state.items() if v in part_values}
-    dirs = [d for ds in state.values() for d in ds]
-    if not dirs:
-        raise FileNotFoundError(
-            f"tx_read_parts: no visible partitions in {table}"
-            + (f" for {part_values}" if part_values is not None else ""))
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*[str(Path(table) / d) for d in dirs])
+    prune with ``tx_read(part_values=…)`` intersect their candidate
+    set with this to avoid the raise-on-empty path (e.g. an IVF probe
+    whose every probed cell happens to be empty)."""
+    return sorted(v for v, ds in
+                  _partitions(_visible(table, as_of), table).items() if ds)
 
 
 def tx_merge_parts(spark: SparkSession, table: str, source: DataFrame,
@@ -808,10 +837,11 @@ def tx_merge_parts(spark: SparkSession, table: str, source: DataFrame,
     conflict window = this call only)."""
     from ..operators.merge import merge_upsert
 
-    if txn_id is not None:
-        for e in _entries(table):
-            if e.get("txn") == txn_id:
-                return e["id"]
+    # the pre-stage check skips the whole read-merge-stage work on a
+    # redelivered or doomed merge
+    done = _prestage(table, txn_id, expect_latest, "tx_merge_parts")
+    if done is not None:
+        return done
     if merge_fn is not None:
         if update_cols is not None or condition is not None:
             raise ValueError(
@@ -838,18 +868,8 @@ def tx_merge_parts(spark: SparkSession, table: str, source: DataFrame,
             merged, table, part_col, mode="overwrite",
             expect_latest=0 if expect_latest is None else expect_latest,
             txn_id=txn_id)
-    if expect_latest is not None:
-        cur = tx_latest_id(table)  # bound once: under a race a second
-        # read could report a different id than the one that failed
-        if cur != expect_latest:
-            raise TxConflict(  # cheap pre-stage check (the tx_write
-                # pattern); the publish loop re-checks, but failing
-                # here skips the whole read-merge-stage work on a
-                # doomed merge and leaves no orphaned staging dirs
-                f"tx_merge_parts: {table} is at {cur}, "
-                f"not the expected snapshot {expect_latest}")
     base = tx_latest_id(table) if expect_latest is None else expect_latest
-    state = _visible_parts(table, as_of=base)
+    state = _partitions(_visible(table, as_of=base), table)
     touched = sorted({
         str(r[0]) for r in
         source.select(source[part_col].cast("string")).distinct().collect()})
@@ -933,8 +953,8 @@ def tx_diff_parts(spark: SparkSession, table: str, v_from: int,
     identity alone."""
     from pyspark.sql import functions as F
 
-    pa = _visible_parts(table, as_of=v_from)
-    pb = _visible_parts(table, as_of=v_to)
+    pa = _partitions(_visible(table, as_of=v_from), table)
+    pb = _partitions(_visible(table, as_of=v_to), table)
     changed = sorted(v for v in set(pa) | set(pb)
                      if pa.get(v) != pb.get(v))
 
@@ -1009,7 +1029,7 @@ def tx_optimize_parts(spark: SparkSession, table: str, part_col: str,
     from .zorder import zorder_key
 
     base = tx_latest_id(table)
-    state = _visible_parts(table, as_of=base)
+    state = _partitions(_visible(table, as_of=base), table)
     dirs = [d for ds in state.values() for d in ds]
     if not dirs:
         raise FileNotFoundError(f"tx_optimize_parts: {table} is empty")
@@ -1022,13 +1042,8 @@ def tx_optimize_parts(spark: SparkSession, table: str, part_col: str,
      .sortWithinPartitions(_PART, "_zkey")
      .drop("_zkey")
      .write.partitionBy(_PART).parquet(str(Path(table) / stage)))
-    from urllib.parse import unquote
-    parts: dict[str, str] = {}
-    for d in (Path(table) / stage).iterdir():
-        if d.name.startswith(f"{_PART}="):
-            parts[unquote(d.name.split("=", 1)[1])] = f"{stage}/{d.name}"
     return _publish(table, {"mode": "replace_parts", "pcol": part_col,
-                            "parts": parts},
+                            "parts": _list_parts(table, stage)},
                     max_retries=10, txn_id=None, expect_latest=base)
 
 
@@ -1042,15 +1057,22 @@ def tx_optimize_parts(spark: SparkSession, table: str, part_col: str,
 # snapshot-consistent CTAS without the copy (clone).
 
 
-def _is_partitioned(table: str) -> bool:
-    # meta commits (stats/bloom registrations) carry no layout signal
-    es = [e for e in _entries(table) if e.get("mode") != "meta"]
-    if es:
-        return "parts" in max(es, key=lambda e: e["id"])
-    cp = _latest_checkpoint(table)
-    if cp:
-        return "parts" in cp
-    raise FileNotFoundError(f"txlog table {table} has no commits")
+def _reset_commit(table: str, state: dict) -> dict:
+    """Payload of the commit that resets a table to ``state`` by
+    reference: an ``overwrite`` listing ``dirs`` for a plain table, an
+    ``overwrite_parts`` carrying ``table``'s partition column (when a
+    surviving entry still records it) for a partitioned one."""
+    if _PLAIN in state:
+        return {"mode": "overwrite", **_encode(state)}
+    if not tx_exists(table):  # no layout known: nothing to reset to
+        raise FileNotFoundError(f"txlog table {table} has no commits")
+    payload = {"mode": "overwrite_parts", **_encode(state)}
+    pcol = next((e["pcol"] for e in
+                 sorted(_entries(table), key=lambda e: -e["id"])
+                 if "pcol" in e), None)
+    if pcol is not None:
+        payload["pcol"] = pcol
+    return payload
 
 
 def tx_restore(table: str, to_version: int, max_retries: int = 10) -> int:
@@ -1070,20 +1092,8 @@ def tx_restore(table: str, to_version: int, max_retries: int = 10) -> int:
         raise ValueError(
             f"tx_restore: {table} is at commit {latest}; cannot "
             f"restore to future version {to_version}")
-    if _is_partitioned(table):
-        state = _visible_parts(table, as_of=to_version)
-        pcol = next((e["pcol"] for e in
-                     sorted(_entries(table), key=lambda e: -e["id"])
-                     if "pcol" in e), None)
-        payload = {"mode": "overwrite_parts",
-                   "parts": {v: list(ds) for v, ds in state.items()},
-                   "restore_of": to_version}
-        if pcol is not None:
-            payload["pcol"] = pcol
-    else:
-        dirs = _visible_dirs(table, as_of=to_version)
-        payload = {"mode": "overwrite", "dirs": dirs,
-                   "restore_of": to_version}
+    payload = {**_reset_commit(table, _visible(table, as_of=to_version)),
+               "restore_of": to_version}
     return _publish(table, payload, max_retries,
                     txn_id=None, expect_latest=latest)
 
@@ -1106,22 +1116,9 @@ def tx_clone(src: str, dst: str, as_of: int | None = None,
     if tx_exists(dst):
         raise FileExistsError(f"tx_clone: {dst} already has commits")
     src_abs = Path(src).resolve()
-    if _is_partitioned(src):
-        state = _visible_parts(src, as_of=as_of)
-        pcol = next((e["pcol"] for e in
-                     sorted(_entries(src), key=lambda e: -e["id"])
-                     if "pcol" in e), None)
-        payload = {"mode": "overwrite_parts",
-                   "parts": {v: [str(src_abs / d) for d in ds]
-                             for v, ds in state.items()},
-                   "clone_of": str(src_abs)}
-        if pcol is not None:
-            payload["pcol"] = pcol
-    else:
-        dirs = _visible_dirs(src, as_of=as_of)
-        payload = {"mode": "overwrite",
-                   "dirs": [str(src_abs / d) for d in dirs],
-                   "clone_of": str(src_abs)}
+    state = {v: [str(src_abs / d) for d in ds]
+             for v, ds in _visible(src, as_of=as_of).items()}
+    payload = {**_reset_commit(src, state), "clone_of": str(src_abs)}
     if as_of is not None:
         payload["src_version"] = as_of
     return _publish(dst, payload, max_retries,
@@ -1135,33 +1132,19 @@ def tx_materialize(spark: SparkSession, table: str,
     self-contained table (Delta's CONVERT-the-clone step), and is a
     no-op-shaped full compaction for any table. Conflict-checked."""
     latest = tx_latest_id(table)
-    if _is_partitioned(table):
-        state = _visible_parts(table)
-        stage = f"{_DATA}/{uuid.uuid4().hex}"
-        parts: dict[str, str] = {}
-        for v, ds in sorted(state.items()):
-            if not ds:
-                continue
-            sub = f"{stage}/{_PART}={v}"
-            (spark.read.parquet(*[str(Path(table) / d) for d in ds])
-             .write.parquet(str(Path(table) / sub)))
-            parts[v] = sub
-        pcol = next((e["pcol"] for e in
-                     sorted(_entries(table), key=lambda e: -e["id"])
-                     if "pcol" in e), None)
-        payload = {"mode": "overwrite_parts", "parts": parts,
-                   "materialized": True}
-        if pcol is not None:
-            payload["pcol"] = pcol
-        return _publish(table, payload, max_retries,
-                        txn_id=None, expect_latest=latest)
-    dirs = _visible_dirs(table)
     stage = f"{_DATA}/{uuid.uuid4().hex}"
-    (spark.read.parquet(*[str(Path(table) / d) for d in dirs])
-     .write.parquet(str(Path(table) / stage)))
-    return _publish(table, {"mode": "overwrite", "dir": stage,
-                            "materialized": True},
-                    max_retries, txn_id=None, expect_latest=latest)
+    state: dict = {}
+    for v, ds in _visible(table).items():
+        if not ds:
+            state[v] = []
+            continue
+        sub = stage if v is _PLAIN else f"{stage}/{_part_dir(v)}"
+        (spark.read.parquet(*[str(Path(table) / d) for d in ds])
+         .write.parquet(str(Path(table) / sub)))
+        state[v] = [sub]
+    payload = {**_reset_commit(table, state), "materialized": True}
+    return _publish(table, payload, max_retries,
+                    txn_id=None, expect_latest=latest)
 
 
 def tx_history(table: str) -> list[dict]:

@@ -6,7 +6,8 @@ between per-table commits leaves behind).
 Delta/Iceberg transactions are single-table; lakehouses get
 multi-table consistency by layering a manifest/metastore pointer
 swap on top — this module is that layer for the txlog format, using
-the same atomic-exclusive-create publish as the txlog itself:
+the txlog's own atomic publish (a fully-written temp file linked into
+place, so a crash never leaves a torn manifest):
 
 Layout::
 
@@ -38,7 +39,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .txlog import tx_latest_id, tx_read, tx_read_parts
+from .txlog import _link_json, tx_latest_id, tx_read
 
 _MANIFEST = "_manifest"
 
@@ -57,18 +58,16 @@ def _manifests(root: str) -> list[dict]:
 def publish_manifest(root: str, tables: dict[str, int],
                      max_retries: int = 10) -> int:
     """Atomically publish a consistent-snapshot manifest pinning
-    ``tables`` (name → commit id). Same optimistic exclusive-create
-    protocol as the txlog publish."""
+    ``tables`` (name → commit id). Same optimistic link-a-complete-
+    temp-file protocol as the txlog publish: a crash mid-write leaves
+    the previous manifest current, never a truncated one."""
     _mdir(root).mkdir(parents=True, exist_ok=True)
     last = max((m["id"] for m in _manifests(root)), default=0)
     for attempt in range(max_retries):
         nid = last + 1 + attempt
-        try:
-            with open(_mdir(root) / f"{nid:08d}.json", "x") as f:
-                json.dump({"id": nid, "tables": tables}, f)
+        if _link_json(_mdir(root) / f"{nid:08d}.json",
+                      {"id": nid, "tables": tables}):
             return nid
-        except FileExistsError:
-            continue
     raise RuntimeError(
         f"publish_manifest: lost the publish race {max_retries} times")
 
@@ -84,14 +83,14 @@ def snapshot_current(root: str, names: list[str]) -> dict[str, int]:
     return {n: tx_latest_id(f"{root}/{n}") for n in names}
 
 
-def read_consistent(spark: SparkSession, root: str,
-                    plain: list[str], partitioned: list[str],
+def read_consistent(spark: SparkSession, root: str, names: list[str],
                     manifest_id: int | None = None,
                     ) -> dict[str, DataFrame]:
-    """Snapshot read of every named table at the commits one manifest
-    pinned — the newest manifest, or ``manifest_id`` for warehouse-
-    level time travel. Raises if no manifest exists (the warehouse
-    was never consistently published) or the id is unknown."""
+    """Snapshot read of every named table (plain or partitioned) at
+    the commits one manifest pinned — the newest manifest, or
+    ``manifest_id`` for warehouse-level time travel. Raises if no
+    manifest exists (the warehouse was never consistently published)
+    or the id is unknown."""
     ms = _manifests(root)
     if manifest_id is not None:
         ms = [m for m in ms if m["id"] == manifest_id]
@@ -101,14 +100,9 @@ def read_consistent(spark: SparkSession, root: str,
             + (f" with id {manifest_id}" if manifest_id is not None else "")
             + f" under {root}/{_MANIFEST}")
     pins = ms[-1]["tables"]
-    missing = [n for n in (*plain, *partitioned) if n not in pins]
+    missing = [n for n in names if n not in pins]
     if missing:
         raise KeyError(
             f"read_consistent: manifest {ms[-1]['id']} does not pin "
             f"{missing}")
-    out: dict[str, DataFrame] = {}
-    for n in plain:
-        out[n] = tx_read(spark, f"{root}/{n}", as_of=pins[n])
-    for n in partitioned:
-        out[n] = tx_read_parts(spark, f"{root}/{n}", as_of=pins[n])
-    return out
+    return {n: tx_read(spark, f"{root}/{n}", as_of=pins[n]) for n in names}

@@ -43,7 +43,7 @@ from library_data_warehouse_and_business_analytics_system_spark.session import (
     get_spark,
 )
 from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (  # noqa: E402
-    tx_read_parts,
+    tx_read,
 )
 
 N, DIM, CELLS, DELTA = 1_000_000, 64, 64, 10_000
@@ -125,7 +125,7 @@ def main() -> None:
             spark, root, delta2, "vec_id", "embedding", txn_id="d2",
             validate=True))
         # the validate scan must be column-pruned: no vector column
-        scan = tx_read_parts(spark, f"{root}/assignments").select(
+        scan = tx_read(spark, f"{root}/assignments").select(
             "id", "cell")
         plan = scan._jdf.queryExecution().executedPlan().toString()
         vector_free = all("vec" not in ln or "vec_id" in ln
@@ -145,7 +145,7 @@ def main() -> None:
         )
         asg_t = f"{root}/assignments"
         keep = int(tx_part_values(asg_t)[0])
-        only = tx_read_parts(spark, asg_t).filter(F.col("cell") == keep)
+        only = tx_read(spark, asg_t).filter(F.col("cell") == keep)
         tx_write_parts(only, asg_t, part_col="cell", mode="overwrite")
         cents = _load_centroids(spark, root)
         probe_q = (corpus.select(

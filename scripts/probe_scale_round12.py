@@ -47,7 +47,7 @@ from library_data_warehouse_and_business_analytics_system_spark.session import (
 )
 from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (  # noqa: E402,E501
     tx_part_values,
-    tx_read_parts,
+    tx_read,
 )
 
 N, DIM, CELLS = 1_000_000, 64, 64
@@ -92,7 +92,7 @@ def main() -> None:
 
     # -- cell-local delta: 10k ids from 4 cells -> toward 4 others ----
     src_cells = [str(c) for c in tx_part_values(asg)[:4]]
-    local_ids = (tx_read_parts(spark, asg, part_values=src_cells)
+    local_ids = (tx_read(spark, asg, part_values=src_cells)
                  .select(F.col("id").alias("vec_id")).limit(N_DELTA)
                  .localCheckpoint())
     # aim the new vectors at a handful of directions: same fract-sin
@@ -122,12 +122,12 @@ def main() -> None:
         cosine,
     )
 
-    stored = tx_read_parts(spark, asg).select(
+    stored = tx_read(spark, asg).select(
         F.col("id").alias("vec_id"), F.col("vec").alias("stored_vec"))
     probe = tgt.limit(20).join(stored, "vec_id")
     ok = probe.where(
         cosine(F.col("stored_vec"), F.col("embedding")) > 0.999999).count()
-    n_dup = (tx_read_parts(spark, asg).groupBy("id")
+    n_dup = (tx_read(spark, asg).groupBy("id")
              .count().where(F.col("count") > 1).count())
     print(f"moved-id spot-check: {ok}/20 stored vectors are the new "
           f"embedding (cos~1); duplicate ids in index: {n_dup}")

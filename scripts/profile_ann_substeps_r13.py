@@ -75,7 +75,7 @@ def main() -> None:
         cents2 = step("upsert.load_centroids", lambda: AI._load_centroids(
             spark, root))
         base = TX.tx_latest_id(asg_t)
-        stored = step("upsert.stored_schema_read", lambda: TX.tx_read_parts(
+        stored = step("upsert.stored_schema_read", lambda: TX.tx_read(
             spark, asg_t, as_of=base))
         step("upsert.delta_assign+lckpt", lambda: None) or None
         delta = AI._assign(delta_in, "vec_id", "embedding", cents2)
@@ -101,11 +101,11 @@ def main() -> None:
         # ---- maintain, decomposed
         tomb = step("maintain.tombstone_ids (lazy)", lambda: AI._tombstone_ids(
             spark, root))
-        n_phys = step("maintain.n_phys_count", lambda: TX.tx_read_parts(
+        n_phys = step("maintain.n_phys_count", lambda: TX.tx_read(
             spark, asg_t).count())
         n_tomb = step("maintain.n_tomb_count", lambda: tomb.count())
         live = step("maintain.live_read+lckpt", lambda: (
-            TX.tx_read_parts(spark, asg_t)
+            TX.tx_read(spark, asg_t)
             .join(F.broadcast(tomb), "id", "left_anti")
             .select(F.col("id").alias("vec_id"),
                     F.col("vec").alias("embedding"))

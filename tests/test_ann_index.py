@@ -139,7 +139,7 @@ def test_streaming_ingest_equals_sequential_upserts(spark, sf_dir,
     import os
 
     from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (
-        tx_read_parts,
+        tx_read,
     )
     from library_data_warehouse_and_business_analytics_system_spark.streaming.ann_ingest import (
         ingest_batch, start_ann_ingest,
@@ -173,8 +173,8 @@ def test_streaming_ingest_equals_sequential_upserts(spark, sf_dir,
     for i, c in enumerate(chunks):
         ingest_batch(c, i, root_b, id_col="vec_id", vec_col="embedding")
 
-    a = tx_read_parts(spark, f"{root_s}/assignments")
-    b = tx_read_parts(spark, f"{root_b}/assignments")
+    a = tx_read(spark, f"{root_s}/assignments")
+    b = tx_read(spark, f"{root_b}/assignments")
     assert a.count() == b.count() == emb.count()
     assert a.exceptAll(b).count() == 0
 
@@ -301,14 +301,14 @@ def test_upsert_validate_rejects_cross_cell_move(spark, sf_dir, tmp_path):
     import pytest
 
     from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (
-        tx_read_parts,
+        tx_read,
     )
 
     emb = _emb(spark, sf_dir)
     root = str(tmp_path / "idx")
     ann_index_build(spark, emb, "vec_id", "embedding", root,
                     dim=_DIM, n_cells=_CELLS, max_iter=2, seed=7)
-    asg = tx_read_parts(spark, f"{root}/assignments").select("id", "cell")
+    asg = tx_read(spark, f"{root}/assignments").select("id", "cell")
     a, b = None, None
     for r in asg.limit(200).collect():
         if a is None:
@@ -352,7 +352,7 @@ def test_upsert_reroute_moves_id_across_cells(spark, sf_dir, tmp_path):
     degrades to the plain merge."""
     from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (
         tx_latest_id,
-        tx_read_parts,
+        tx_read,
     )
 
     emb = _emb(spark, sf_dir)
@@ -360,7 +360,7 @@ def test_upsert_reroute_moves_id_across_cells(spark, sf_dir, tmp_path):
     ann_index_build(spark, emb, "vec_id", "embedding", root,
                     dim=_DIM, n_cells=_CELLS, max_iter=2, seed=7)
     asg_t = f"{root}/assignments"
-    asg = tx_read_parts(spark, asg_t).select("id", "cell")
+    asg = tx_read(spark, asg_t).select("id", "cell")
     a, b = None, None
     for r in asg.limit(200).collect():
         if a is None:
@@ -389,7 +389,7 @@ def test_upsert_reroute_moves_id_across_cells(spark, sf_dir, tmp_path):
     assert tx_latest_id(asg_t) == v_before + 1
 
     # exactly one copy, in the NEW cell only
-    copies = (tx_read_parts(spark, asg_t)
+    copies = (tx_read(spark, asg_t)
               .filter(F.col("id") == a["id"]).collect())
     assert len(copies) == 1
     assert copies[0]["cell"] == b["cell"]
@@ -424,12 +424,12 @@ def test_upsert_reroute_moves_id_across_cells(spark, sf_dir, tmp_path):
 def test_query_over_empty_probed_cells_returns_empty(spark, sf_dir,
                                                      tmp_path):
     """A probe set whose every cell is physically absent returns an
-    EMPTY result (correct schema) instead of tx_read_parts's
+    EMPTY result (correct schema) instead of tx_read's
     no-visible-partition FileNotFoundError; partial overlap degrades
     to the surviving cells' candidates."""
     from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (
         tx_part_values,
-        tx_read_parts,
+        tx_read,
         tx_write_parts,
     )
 
@@ -443,7 +443,7 @@ def test_query_over_empty_probed_cells_returns_empty(spark, sf_dir,
     keep = cells[0]
     # shrink the index to ONE physical cell (centroids unchanged), so
     # every other cell's nearest-centroid probes hit absent partitions
-    only = tx_read_parts(spark, asg_t).filter(F.col("cell") == keep)
+    only = tx_read(spark, asg_t).filter(F.col("cell") == keep)
     tx_write_parts(only, asg_t, part_col="cell", mode="overwrite")
     assert tx_part_values(asg_t) == [str(keep)]
 

@@ -16,7 +16,7 @@ from library_data_warehouse_and_business_analytics_system_spark.operators.cdc im
 )
 from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (
     tx_latest_id,
-    tx_read_parts,
+    tx_read,
 )
 from library_data_warehouse_and_business_analytics_system_spark.streaming.cdc_ingest import (
     apply_cdc_batch,
@@ -47,7 +47,7 @@ def _batches(spark):
 def _snap(spark, t):
     return sorted(
         (r["k"], r["part"], r["v"])
-        for r in tx_read_parts(spark, t).collect())
+        for r in tx_read(spark, t).collect())
 
 
 def test_sequential_batches_equal_one_shot_apply(spark, tmp_path):
@@ -79,10 +79,10 @@ def test_delete_emptied_partition_vanishes(spark, tmp_path):
     for i, b in enumerate(batches):
         apply_cdc_batch(b, i, t, ["k"], "part")
     with pytest.raises(FileNotFoundError):
-        tx_read_parts(spark, t, part_values=["c"])
+        tx_read(spark, t, part_values=["c"])
     assert all(p != "c" for _, p, _ in _snap(spark, t))
     # time travel BEFORE the emptying still sees partition c
-    pre = tx_read_parts(spark, t, as_of=2, part_values=["c"])
+    pre = tx_read(spark, t, as_of=2, part_values=["c"])
     assert pre.count() == 2
 
 

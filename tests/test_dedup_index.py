@@ -241,7 +241,7 @@ def test_maintain_index_preserves_probe_and_bounds_dirs(spark, sf_dir,
         maintain_index,
     )
     from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (
-        _visible_dirs,
+        _snapshot_dirs,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -258,7 +258,7 @@ def test_maintain_index_preserves_probe_and_bounds_dirs(spark, sf_dir,
 
     before = _pairs(dedup_new_batch(spark, batch, root,
                                     threshold=THRESHOLD))
-    assert len(_visible_dirs(f"{root}/bands")) >= 30
+    assert len(_snapshot_dirs(f"{root}/bands")) >= 30
 
     stats = maintain_index(spark, root, vacuum_retention_sec=0)
     assert stats["bands"]["after_dirs"] == 1
@@ -270,11 +270,11 @@ def test_maintain_index_preserves_probe_and_bounds_dirs(spark, sf_dir,
     assert after == before and after
     # metadata bounded: one log entry's worth of checkpoints, one
     # visible dir, and the physical data dir count matches
-    assert len(_visible_dirs(f"{root}/bands")) == 1
+    assert len(_snapshot_dirs(f"{root}/bands")) == 1
     assert len(list((Path(root) / "bands" / "data").iterdir())) == 1
     # the cycle composes: appends continue after maintenance
     append_to_index(batch, root, txn_id="day-31")
-    assert len(_visible_dirs(f"{root}/bands")) == 2
+    assert len(_snapshot_dirs(f"{root}/bands")) == 2
 
 
 def test_probe_candidate_cap_bounds_adversarial_batch(spark, tmp_path):

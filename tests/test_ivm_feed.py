@@ -12,7 +12,7 @@ from library_data_warehouse_and_business_analytics_system_spark.operators.ivm im
     feed_to_delta, materialize_join_view, refresh_join_view,
 )
 from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (
-    tx_diff_parts, tx_latest_id, tx_merge_parts, tx_read_parts,
+    tx_diff_parts, tx_latest_id, tx_merge_parts, tx_read,
     tx_write_parts,
 )
 
@@ -34,8 +34,8 @@ def test_join_view_tracks_two_txlog_tables(spark, tmp_path):
     tx_write_parts(_dims(spark, [(1, "gold"), (2, "silver")]),
                    db, "k", mode="overwrite")
     va0, vb0 = tx_latest_id(fa), tx_latest_id(db)
-    a_old = tx_read_parts(spark, fa)
-    b_old = tx_read_parts(spark, db)
+    a_old = tx_read(spark, fa)
+    b_old = tx_read(spark, db)
     view = materialize_join_view(a_old, b_old, "k")
     view_rows = view.collect()
     view0 = spark.createDataFrame(view_rows, view.schema)
@@ -52,8 +52,8 @@ def test_join_view_tracks_two_txlog_tables(spark, tmp_path):
     dbd = feed_to_delta(tx_diff_parts(spark, db, vb0))
     got = refresh_join_view(view0, a_old, da, b_old, dbd, "k")
 
-    want = materialize_join_view(tx_read_parts(spark, fa),
-                                 tx_read_parts(spark, db), "k")
+    want = materialize_join_view(tx_read(spark, fa),
+                                 tx_read(spark, db), "k")
     assert {tuple(r) for r in got.collect()} \
         == {tuple(r) for r in want.collect()}
     # the update really flowed through: old amount gone, new present
@@ -72,8 +72,8 @@ def test_empty_feed_is_noop(spark, tmp_path):
     tx_write_parts(_dims(spark, [(1, "gold")]), db, "k",
                    mode="overwrite")
     va0 = tx_latest_id(fa)
-    a = tx_read_parts(spark, fa)
-    b = tx_read_parts(spark, db)
+    a = tx_read(spark, fa)
+    b = tx_read(spark, db)
     view = materialize_join_view(a, b, "k")
     da = feed_to_delta(tx_diff_parts(spark, fa, va0))
     got = refresh_join_view(view, a, da, b, None, "k")

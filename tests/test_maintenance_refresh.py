@@ -19,11 +19,11 @@ from library_data_warehouse_and_business_analytics_system_spark.sources.mor impo
     tx_delete_keys, tx_has_live_deletes, tx_read_mor,
 )
 from library_data_warehouse_and_business_analytics_system_spark.sources.skipping import (
-    tx_read_parts_pruned, tx_read_point, tx_read_pruned, tx_refresh_stats,
+    tx_read_point, tx_read_pruned, tx_refresh_stats,
     tx_write_stats,
 )
 from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (
-    tx_checkpoint, tx_read, tx_read_parts, tx_truncate_log, tx_write,
+    tx_checkpoint, tx_read, tx_truncate_log, tx_write,
     tx_write_parts,
 )
 
@@ -74,7 +74,7 @@ def test_maintain_compacts_live_mor_deletes(spark, tmp_path):
     after = _collect(tx_read(spark, dim))      # plain read works again
     assert after == before                      # snapshot rows identical
     # facts (partitioned — no MoR path) passed through maintenance too
-    assert tx_read_parts(spark, f"{root}/fact_sales").count() == 100
+    assert tx_read(spark, f"{root}/fact_sales").count() == 100
 
 
 def test_maintain_refreshes_parts_stats_after_optimize(spark, tmp_path):
@@ -85,7 +85,7 @@ def test_maintain_refreshes_parts_stats_after_optimize(spark, tmp_path):
     root = str(tmp_path / "wh")
     _mini_warehouse(spark, root)
     fact = f"{root}/fact_sales"
-    plain_before = _collect(tx_read_parts(spark, fact).drop(YEAR_KEY))
+    plain_before = _collect(tx_read(spark, fact).drop(YEAR_KEY))
 
     maintain_warehouse(
         spark, root,
@@ -93,7 +93,7 @@ def test_maintain_refreshes_parts_stats_after_optimize(spark, tmp_path):
         stats={"fact_sales": ["fk"]})
 
     # data byte-for-row identical through optimize + refresh
-    assert _collect(tx_read_parts(spark, fact).drop(YEAR_KEY)) \
+    assert _collect(tx_read(spark, fact).drop(YEAR_KEY)) \
         == plain_before
     # the log was truncated: only checkpoint-carried stats can prune
     assert json.loads(
@@ -108,8 +108,8 @@ def test_maintain_refreshes_parts_stats_after_optimize(spark, tmp_path):
 
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(type(spark.read), "parquet", spy)
-        got = _collect(tx_read_parts_pruned(spark, fact, "fk",
-                                            lo=0, hi=10).drop(YEAR_KEY))
+        got = _collect(tx_read_pruned(spark, fact, "fk",
+                                      lo=0, hi=10).drop(YEAR_KEY))
     # fk 0..10 live in a zkey-contiguous subset of the optimized dirs
     n_dirs = len({d for ds in _visible(fact).values() for d in ds})
     assert len(seen) < n_dirs, (len(seen), n_dirs)
@@ -118,9 +118,9 @@ def test_maintain_refreshes_parts_stats_after_optimize(spark, tmp_path):
 
 def _visible(table):
     from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (
-        _visible_parts,
+        _visible,
     )
-    return _visible_parts(table)
+    return _visible(table)
 
 
 def test_refresh_builds_bloom_and_checkpoint_carries_it(spark, tmp_path):

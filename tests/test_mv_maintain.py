@@ -14,7 +14,7 @@ from library_data_warehouse_and_business_analytics_system_spark.operators.increm
     reflected_version,
 )
 from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (
-    tx_latest_id, tx_read, tx_read_parts,
+    tx_latest_id, tx_read,
 )
 from library_data_warehouse_and_business_analytics_system_spark.streaming.mv_maintain import (
     FactWithRollups, MaterializedRollup, ingest_mv_batch, start_mv_ingest,
@@ -49,7 +49,7 @@ def _cfg(tmp_path, name):
 
 
 def _expect(spark, cfg):
-    fact = tx_read_parts(spark, cfg.fact_table)
+    fact = tx_read(spark, cfg.fact_table)
     sums = {(r.grp, r.s, r.n) for r in
             fact.groupBy("grp").agg(F.sum("v").alias("s"),
                                     F.count(F.lit(1)).alias("n")).collect()}

@@ -15,7 +15,7 @@ from library_data_warehouse_and_business_analytics_system_spark.sources.txlog im
     tx_latest_id,
     tx_merge_parts,
     tx_optimize_parts,
-    tx_read_parts,
+    tx_read,
     tx_write_parts,
 )
 
@@ -36,7 +36,7 @@ def orders_table(spark, sf_dir, tmp_path):
 def _rows(spark, t, as_of=None):
     return sorted(
         tuple(r) for r in
-        tx_read_parts(spark, t, as_of=as_of)
+        tx_read(spark, t, as_of=as_of)
         .select("o_orderkey", "o_year", "o_custkey", "tp").collect())
 
 
@@ -74,11 +74,11 @@ def test_optimize_improves_second_column_clustering(spark, orders_table):
     # file_bounds over the whole data dir would mix generations; read
     # only the dirs the CURRENT snapshot references.
     from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (
-        _visible_parts,
+        _visible,
     )
     from pathlib import Path
     spans = []
-    for ds in _visible_parts(t).values():
+    for ds in _visible(t).values():
         for d in ds:
             for b in zorder.file_bounds(str(Path(t) / d), ["tp"]):
                 lo, hi = b["tp"]
@@ -113,6 +113,6 @@ def test_merge_still_works_after_optimize(spark, orders_table):
     tx_merge_parts(spark, t, delta, keys=["o_orderkey"],
                    part_col="o_year", update_cols=["tp"])
     got = {r["o_orderkey"]: r["tp"]
-           for r in tx_read_parts(spark, t).collect()}
+           for r in tx_read(spark, t).collect()}
     for r in delta.collect():
         assert got[r["o_orderkey"]] == r["tp"]

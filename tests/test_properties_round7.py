@@ -21,7 +21,7 @@ from library_data_warehouse_and_business_analytics_system_spark.operators.increm
     build_minmax_aggregate, refresh_minmax_aggregate,
 )
 from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (
-    tx_merge_parts, tx_read, tx_read_parts, tx_write_parts,
+    tx_merge_parts, tx_read, tx_write_parts,
 )
 from tests.test_bpe import _ref_train
 
@@ -65,7 +65,7 @@ def test_minmax_refresh_equals_recompute_random(spark, tmp_path_factory,
         got = {(r.grp, r.min_v, r.max_v, r.n_rows)
                for r in tx_read(spark, agg).collect()}
         want = {(r.grp, r.m, r.x, r.n) for r in
-                tx_read_parts(spark, t).groupBy("grp")
+                tx_read(spark, t).groupBy("grp")
                 .agg(F.min("v").alias("m"), F.max("v").alias("x"),
                      F.count(F.lit(1)).alias("n")).collect()}
         assert got == want

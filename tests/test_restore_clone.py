@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (
     TxConflict, tx_checkpoint, tx_clone, tx_expire_checkpoints,
     tx_latest_id, tx_materialize, tx_merge_parts, tx_read,
-    tx_read_parts, tx_restore, tx_truncate_log, tx_write,
+    tx_restore, tx_truncate_log, tx_write,
     tx_write_parts,
 )
 
@@ -70,12 +70,12 @@ def test_restore_partitioned_and_merge_continues(spark, tmp_path):
     tx_write_parts(_rows(spark, [(8, "1996")], cols=("k", "yr")),
                    t, "yr", mode="replace")
     tx_restore(t, c2)
-    assert _collect(tx_read_parts(spark, t).select("k")) == [(1,), (2,), (3,)]
+    assert _collect(tx_read(spark, t).select("k")) == [(1,), (2,), (3,)]
     # partition-scoped merge still works on the restored table
     tx_merge_parts(spark, t, _rows(spark, [(3, "1996"), (4, "1995")],
                                    cols=("k", "yr")),
                    keys=["k"], part_col="yr")
-    assert _collect(tx_read_parts(spark, t).select("k")) == [
+    assert _collect(tx_read(spark, t).select("k")) == [
         (1,), (2,), (3,), (4,)]
 
 
@@ -154,10 +154,10 @@ def test_clone_partitioned_then_merge(spark, tmp_path):
     assert _data_dirs(dst) == set()
     tx_merge_parts(spark, dst, _rows(spark, [(3, "1996")], cols=("k", "yr")),
                    keys=["k"], part_col="yr")
-    assert _collect(tx_read_parts(spark, dst).select("k")) == [
+    assert _collect(tx_read(spark, dst).select("k")) == [
         (1,), (2,), (3,)]
     # the merge rewrote 1996 inside DST only; source untouched
-    assert _collect(tx_read_parts(spark, src).select("k")) == [(1,), (2,)]
+    assert _collect(tx_read(spark, src).select("k")) == [(1,), (2,)]
 
 
 def test_materialize_makes_clone_self_contained(spark, tmp_path):
@@ -181,12 +181,12 @@ def test_materialize_partitioned_preserves_state(spark, tmp_path):
     tx_write_parts(_rows(spark, [(3, "1996")], cols=("k", "yr")),
                    src, "yr", mode="append")
     tx_clone(src, dst)
-    before = _collect(tx_read_parts(spark, dst).select("k", "yr"))
+    before = _collect(tx_read(spark, dst).select("k", "yr"))
     tx_materialize(spark, dst)
-    assert _collect(tx_read_parts(spark, dst).select("k", "yr")) == before
+    assert _collect(tx_read(spark, dst).select("k", "yr")) == before
     import shutil
     shutil.rmtree(src)
-    assert _collect(tx_read_parts(spark, dst).select("k", "yr")) == before
+    assert _collect(tx_read(spark, dst).select("k", "yr")) == before
 
 
 def test_materialize_conflict_detection(spark, tmp_path):
@@ -197,19 +197,19 @@ def test_materialize_conflict_detection(spark, tmp_path):
 
     t = str(tmp_path / "t")
     tx_write(_rows(spark, [(1, "a")]), t)
-    orig = TX._visible_dirs
+    orig = TX._visible
 
     def racing(table, as_of=None):
-        dirs = orig(table, as_of)
-        TX._visible_dirs = orig     # fire once
+        state = orig(table, as_of)
+        TX._visible = orig     # fire once
         tx_write(_rows(spark, [(2, "r")]), t)
-        return dirs
+        return state
 
-    TX._visible_dirs = racing
+    TX._visible = racing
     try:
         with pytest.raises(TxConflict):
             tx_materialize(spark, t)
     finally:
-        TX._visible_dirs = orig
+        TX._visible = orig
     # the racer's commit survived
     assert (2, "r") in _collect(tx_read(spark, t))

@@ -244,10 +244,10 @@ def test_partitioned_stats_skipping_two_tiers(spark, tmp_path):
     — spy-pinned open counts — while staying exactly equal to the
     plain filtered read. Mixed stats-less commits never get skipped."""
     from library_data_warehouse_and_business_analytics_system_spark.sources.skipping import (
-        tx_read_parts_pruned, tx_write_parts_stats,
+        tx_read_pruned, tx_write_parts_stats,
     )
     from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (
-        tx_read_parts, tx_write_parts,
+        tx_read, tx_write_parts,
     )
 
     def day_df(spark, year, day, n=5):
@@ -273,18 +273,18 @@ def test_partitioned_stats_skipping_two_tiers(spark, tmp_path):
         mp.setattr(type(spark.read), "parquet", spy)
         got = sorted(
             tuple(r) for r in
-            tx_read_parts_pruned(spark, t, "day", lo=3,
-                                 part_values=["2020"]).collect())
+            tx_read_pruned(spark, t, "day", lo=3,
+                           part_values=["2020"]).collect())
     assert len(seen) == 2                 # days 3,4 of 2020 only
     want = sorted(tuple(r) for r in
-                  tx_read_parts(spark, t)
+                  tx_read(spark, t)
                   .where((F.col("yr") == 2020) & (F.col("day") >= 3))
                   .collect())
     assert got == want and len(got) == 10
     # a stats-less append is always read
     tx_write_parts(day_df(spark, 2020, 9), t, "yr")
     got = sorted(tuple(r) for r in
-                 tx_read_parts_pruned(spark, t, "day", lo=9).collect())
+                 tx_read_pruned(spark, t, "day", lo=9).collect())
     # day 9 exists only in the stats-less 2020 append: its dir was
     # READ (not skipped) and the residual filter kept exactly it
     assert len(got) == 5 and {r[1] for r in got} == {2020}

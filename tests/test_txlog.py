@@ -522,3 +522,35 @@ def test_tx_history(spark, tmp_path):
     h = TX.tx_history(t)
     assert h[-1]["operation"] == "checkpoint-horizon"
     assert [r["id"] for r in h[:-1]] == [3]
+
+
+def test_manifest_publish_crash_keeps_previous_manifest(tmp_path,
+                                                        monkeypatch):
+    """A crash while a warehouse manifest is being written must leave
+    the previous manifest current — never a truncated file that makes
+    every later consistent read (and publish) fail."""
+    from library_data_warehouse_and_business_analytics_system_spark.sources.txmulti import (
+        latest_manifest, publish_manifest,
+    )
+
+    root = str(tmp_path / "wh")
+    assert publish_manifest(root, {"dim": 1, "fact": 1}) == 1
+    real_write_text = Path.write_text
+
+    def torn_dump(obj, f, **kw):
+        f.write(json.dumps(obj, **kw)[:10])
+        raise OSError("simulated crash mid-write")
+
+    def torn_write_text(self, data, *a, **kw):
+        real_write_text(self, data[:10], *a, **kw)
+        raise OSError("simulated crash mid-write")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    monkeypatch.setattr(Path, "write_text", torn_write_text)
+    with pytest.raises(OSError, match="simulated crash"):
+        publish_manifest(root, {"dim": 2, "fact": 2})
+    monkeypatch.undo()
+
+    assert latest_manifest(root) == {"id": 1, "tables": {"dim": 1, "fact": 1}}
+    assert publish_manifest(root, {"dim": 2, "fact": 2}) == 2
+    assert latest_manifest(root)["tables"] == {"dim": 2, "fact": 2}

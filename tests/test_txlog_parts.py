@@ -13,7 +13,7 @@ import pytest
 from library_data_warehouse_and_business_analytics_system_spark.sources import txlog
 from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (
     TxConflict, tx_checkpoint, tx_merge, tx_merge_parts, tx_read,
-    tx_read_parts, tx_truncate_log, tx_vacuum, tx_write, tx_write_parts,
+    tx_truncate_log, tx_vacuum, tx_write, tx_write_parts,
 )
 
 
@@ -56,12 +56,12 @@ def test_merge_parts_rewrites_only_touched_partitions(spark, tmp_path):
     assert len(new_stage_dirs) == 1
 
     got = {(r.o_orderkey, r.o_year, r.o_total)
-           for r in tx_read_parts(spark, t).collect()}
+           for r in tx_read(spark, t).collect()}
     assert got == {(1, 2019, 10.0), (2, 2019, 20.0), (3, 2020, 99.0),
                    (4, 2021, 40.0), (9, 2022, 90.0)}
     # pre-merge snapshot is one time-travel hop away
     old = {(r.o_orderkey, r.o_total)
-           for r in tx_read_parts(spark, t, as_of=1).collect()}
+           for r in tx_read(spark, t, as_of=1).collect()}
     assert old == {(1, 10.0), (2, 20.0), (3, 30.0), (4, 40.0)}
 
 
@@ -89,7 +89,7 @@ def test_merge_parts_matches_whole_table_merge(spark, tmp_path):
     tx_merge(spark, tw, delta, keys=["o_orderkey"])
 
     got = sorted((r.o_orderkey, r.o_year, r.o_total)
-                 for r in tx_read_parts(spark, tp).collect())
+                 for r in tx_read(spark, tp).collect())
     want = sorted((r.o_orderkey, r.o_year, r.o_total)
                   for r in tx_read(spark, tw).collect())
     assert got == want
@@ -111,14 +111,14 @@ def test_merge_parts_crash_leaves_pre_merge_snapshot(spark, tmp_path,
     # readers still on the pre-merge snapshot; staged dir is an
     # invisible orphan that vacuum reclaims
     got = {(r.o_orderkey, r.o_total)
-           for r in tx_read_parts(spark, t).collect()}
+           for r in tx_read(spark, t).collect()}
     assert got == {(1, 10.0), (2, 20.0)}
     assert len(tx_vacuum(t, retention_sec=0)) == 1
     # retry succeeds
     tx_merge_parts(spark, t, _orders(spark, [(2, 2020, 99.0)]),
                    keys=["o_orderkey"], part_col="o_year")
     got = {(r.o_orderkey, r.o_total)
-           for r in tx_read_parts(spark, t).collect()}
+           for r in tx_read(spark, t).collect()}
     assert got == {(1, 10.0), (2, 99.0)}
 
 
@@ -130,7 +130,7 @@ def test_merge_parts_conflict_detection(spark, tmp_path):
     tx_write_parts(_orders(spark, [(1, 2019, 10.0)]), t, "o_year",
                    mode="overwrite")
 
-    real = txlog._visible_parts
+    real = txlog._visible
     fired = {"done": False}
 
     def racing(table, as_of=None):
@@ -142,7 +142,7 @@ def test_merge_parts_conflict_detection(spark, tmp_path):
         return state
 
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(txlog, "_visible_parts", racing)
+        mp.setattr(txlog, "_visible", racing)
         with pytest.raises(TxConflict):
             tx_merge_parts(spark, t, _orders(spark, [(1, 2019, 11.0)]),
                            keys=["o_orderkey"], part_col="o_year")
@@ -150,7 +150,7 @@ def test_merge_parts_conflict_detection(spark, tmp_path):
     tx_merge_parts(spark, t, _orders(spark, [(1, 2019, 11.0)]),
                    keys=["o_orderkey"], part_col="o_year")
     got = {(r.o_orderkey, r.o_total)
-           for r in tx_read_parts(spark, t).collect()}
+           for r in tx_read(spark, t).collect()}
     assert got == {(1, 11.0), (7, 70.0)}
 
 
@@ -167,7 +167,7 @@ def test_merge_parts_rejects_partition_moving_updates(spark, tmp_path):
                    keys=["o_orderkey"], part_col="o_year",
                    update_cols=["o_total"])
     assert {(r.o_orderkey, r.o_total)
-            for r in tx_read_parts(spark, t).collect()} == {(1, 99.0)}
+            for r in tx_read(spark, t).collect()} == {(1, 99.0)}
 
 
 def test_merge_parts_rejects_dtype_drift(spark, tmp_path):
@@ -193,14 +193,14 @@ def test_merge_parts_rejects_dtype_drift(spark, tmp_path):
         tx_merge_parts(spark, t, drifted, keys=["o_orderkey"],
                        part_col="o_year")
     # nothing committed; the cast-first path works
-    assert tx_read_parts(spark, t).count() == 2
+    assert tx_read(spark, t).count() == 2
     from pyspark.sql import functions as F
     tx_merge_parts(spark, t,
                    drifted.withColumn("o_total",
                                       F.col("o_total").cast("float")),
                    keys=["o_orderkey"], part_col="o_year")
     got = {(r.o_orderkey, r.o_total)
-           for r in tx_read_parts(spark, t).collect()}
+           for r in tx_read(spark, t).collect()}
     assert got == {(1, 99.0), (2, 20.0)}
 
 
@@ -226,14 +226,14 @@ def test_merge_parts_rejects_dtype_drift_on_new_partitions(spark, tmp_path):
                        part_col="o_year")
     # nothing committed; cast-first inserts cleanly and the whole
     # table still plain-reads (single-generation schema)
-    assert tx_read_parts(spark, t).count() == 1
+    assert tx_read(spark, t).count() == 1
     from pyspark.sql import functions as F
     tx_merge_parts(spark, t,
                    drifted.withColumn("o_total",
                                       F.col("o_total").cast("float")),
                    keys=["o_orderkey"], part_col="o_year")
     got = {(r.o_orderkey, r.o_total)
-           for r in tx_read_parts(spark, t).collect()}
+           for r in tx_read(spark, t).collect()}
     assert got == {(1, 10.0), (9, 99.0)}
 
 
@@ -254,7 +254,7 @@ def test_merge_parts_rejects_dtype_drift_with_merge_fn_new_parts(
         tx_merge_parts(spark, t, drifted, keys=["o_orderkey"],
                        part_col="o_year",
                        merge_fn=lambda cur, src: cur.unionByName(src))
-    assert tx_read_parts(spark, t).count() == 1
+    assert tx_read(spark, t).count() == 1
 
 
 def test_merge_parts_expect_latest_anchors_caller_snapshot(spark, tmp_path):
@@ -275,14 +275,14 @@ def test_merge_parts_expect_latest_anchors_caller_snapshot(spark, tmp_path):
                        expect_latest=snap)
     # the racer's row survives, the conflicted update never landed
     got = {(r.o_orderkey, r.o_total)
-           for r in tx_read_parts(spark, t).collect()}
+           for r in tx_read(spark, t).collect()}
     assert got == {(1, 10.0), (2, 20.0)}
     # anchored at the CURRENT snapshot the same merge goes through
     tx_merge_parts(spark, t, _orders(spark, [(1, 2019, 99.0)]),
                    keys=["o_orderkey"], part_col="o_year",
                    expect_latest=txlog.tx_latest_id(t))
     got = {(r.o_orderkey, r.o_total)
-           for r in tx_read_parts(spark, t).collect()}
+           for r in tx_read(spark, t).collect()}
     assert got == {(1, 99.0), (2, 20.0)}
 
 
@@ -327,25 +327,33 @@ def test_partitioned_checkpoint_truncate_vacuum(spark, tmp_path):
     # replacement); every checkpoint-referenced dir must survive
     assert len(tx_vacuum(t, retention_sec=0)) <= 1
     got = {(r.o_orderkey, r.o_total)
-           for r in tx_read_parts(spark, t).collect()}
+           for r in tx_read(spark, t).collect()}
     assert got == {(1, 9.0), (2, 2.0)}
     # writes continue after the checkpoint with monotone ids
     assert tx_write_parts(_orders(spark, [(5, 2022, 5.0)]), t, "o_year",
                           mode="append") == 4
-    assert tx_read_parts(spark, t).count() == 3
+    assert tx_read(spark, t).count() == 3
     # pruned read touches one partition only
     assert {r.o_orderkey for r in
-            tx_read_parts(spark, t, part_values=["2020"]).collect()} == {2}
+            tx_read(spark, t, part_values=["2020"]).collect()} == {2}
 
 
 def test_mixed_plain_and_partitioned_entries_rejected(spark, tmp_path):
     t = str(tmp_path / "t")
     tx_write_parts(_orders(spark, [(1, 2019, 1.0)]), t, "o_year")
     tx_write(_orders(spark, [(2, 2020, 2.0)]), t)
-    with pytest.raises(ValueError, match="unpartitioned commit"):
-        tx_read_parts(spark, t)
-    with pytest.raises(ValueError, match="partitioned commit"):
+    with pytest.raises(ValueError, match="unpartitioned but the table is "
+                                         "partitioned"):
         tx_read(spark, t)
+    with pytest.raises(ValueError, match="keeps one layout"):
+        tx_read(spark, t, part_values=["2019"])
+    # the other order is rejected the same way
+    t2 = str(tmp_path / "t2")
+    tx_write(_orders(spark, [(2, 2020, 2.0)]), t2)
+    tx_write_parts(_orders(spark, [(1, 2019, 1.0)]), t2, "o_year")
+    with pytest.raises(ValueError, match="partitioned but the table is "
+                                         "unpartitioned"):
+        tx_read(spark, t2)
 
 
 def test_null_partition_value_rejected(spark, tmp_path):
@@ -439,7 +447,7 @@ def test_incremental_aggregate_refresh_equals_recompute(spark, tmp_path):
     got = {(r.o_cust, r.sum_o_total, r.n_rows)
            for r in tx_read(spark, agg).collect()}
 
-    fact = tx_read_parts(spark, t)
+    fact = tx_read(spark, t)
     want = {(r.o_cust, r.s, r.n) for r in
             fact.groupBy("o_cust")
             .agg(F_sum("o_total").alias("s"),
@@ -473,12 +481,12 @@ def test_read_parts_schema_evolution(spark, tmp_path):
         [(2, 2020, 2.0, "x")],
         "o_orderkey long, o_year int, o_total double, note string")
     tx_write_parts(evolved, t, "o_year", mode="append")
-    merged = tx_read_parts(spark, t, merge_schema=True)
+    merged = tx_read(spark, t, merge_schema=True)
     assert set(merged.columns) == {"o_orderkey", "o_year", "o_total",
                                    "note"}
     rows = {r.o_orderkey: r for r in merged.collect()}
     assert rows[1].note is None and rows[2].note == "x"
-    assert tx_read_parts(spark, t).count() == 2
+    assert tx_read(spark, t).count() == 2
 
 
 @pytest.mark.slow  # opt-in lane (r14): endurance/equivalence run
@@ -501,7 +509,7 @@ def test_incremental_minmax_refresh_two_tier(spark, tmp_path):
 
     def full(spark, t):
         return {(r.o_cust, r.m, r.x, r.n) for r in
-                tx_read_parts(spark, t).groupBy("o_cust")
+                tx_read(spark, t).groupBy("o_cust")
                 .agg(F.min("o_total").alias("m"), F.max("o_total").alias("x"),
                      F.count(F.lit(1)).alias("n")).collect()}
 
@@ -566,11 +574,11 @@ def test_partitioned_timestamp_time_travel(spark, tmp_path, monkeypatch):
     tx_write_parts(rows(spark, [(2, 2020)]), t, "part")          # @20
     monkeypatch.undo()
     assert {r.k for r in
-            tx_read_parts(spark, t, as_of_ts=15.0).collect()} == {1}
+            tx_read(spark, t, as_of_ts=15.0).collect()} == {1}
     assert {r.k for r in
-            tx_read_parts(spark, t, as_of_ts=25.0).collect()} == {1, 2}
+            tx_read(spark, t, as_of_ts=25.0).collect()} == {1, 2}
     with pytest.raises(ValueError, match="not both"):
-        tx_read_parts(spark, t, as_of=1, as_of_ts=15.0)
+        tx_read(spark, t, as_of=1, as_of_ts=15.0)
 
 
 def test_maintenance_cycle_reclaims_superseded_generations(spark, tmp_path):
@@ -593,7 +601,7 @@ def test_maintenance_cycle_reclaims_superseded_generations(spark, tmp_path):
                    keys=["o_orderkey"], part_col="o_year",
                    update_cols=["o_total"])
     before = _file_digests(t)
-    want = sorted(map(tuple, tx_read_parts(spark, t).collect()))
+    want = sorted(map(tuple, tx_read(spark, t).collect()))
 
     tx_checkpoint(t)
     tx_truncate_log(t)
@@ -611,7 +619,7 @@ def test_maintenance_cycle_reclaims_superseded_generations(spark, tmp_path):
     log_files = list((Path(t) / "_txlog").glob("*.json")) or \
         list(Path(t).rglob("*.json"))
     assert len(log_files) <= 3
-    got = sorted(map(tuple, tx_read_parts(spark, t).collect()))
+    got = sorted(map(tuple, tx_read(spark, t).collect()))
     assert got == want == sorted(
         [(1, 2019, 15.0), (2, 2019, 20.0), (3, 2020, 35.0),
          (4, 2021, 40.0)])

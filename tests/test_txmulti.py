@@ -45,16 +45,16 @@ def test_consistent_read_ignores_unmanifested_commits(spark, tmp_path):
                                   "id int, yr int, amt double")
     tx_write_parts(extra, f"{root}/fact", "yr", mode="append")
 
-    got = read_consistent(spark, root, ["dim"], ["fact"])
+    got = read_consistent(spark, root, ["dim", "fact"])
     assert got["fact"].count() == 2          # pinned pre-append
     from library_data_warehouse_and_business_analytics_system_spark.sources.txlog import (
-        tx_read_parts,
+        tx_read,
     )
-    assert tx_read_parts(spark, f"{root}/fact").count() == 3  # torn view
+    assert tx_read(spark, f"{root}/fact").count() == 3  # torn view
 
     # the writer finishes: next manifest exposes the new row
     publish_manifest(root, snapshot_current(root, ["dim", "fact"]))
-    assert read_consistent(spark, root, ["dim"], ["fact"])["fact"].count() == 3
+    assert read_consistent(spark, root, ["dim", "fact"])["fact"].count() == 3
 
 
 def test_manifest_time_travel_across_tables(spark, tmp_path):
@@ -66,10 +66,10 @@ def test_manifest_time_travel_across_tables(spark, tmp_path):
                    f"{root}/fact", "yr", mode="overwrite")
     publish_manifest(root, snapshot_current(root, ["dim", "fact"]))
 
-    v1 = read_consistent(spark, root, ["dim"], ["fact"], manifest_id=1)
+    v1 = read_consistent(spark, root, ["dim", "fact"], manifest_id=1)
     assert {r["name"] for r in v1["dim"].collect()} == {"a", "b"}
     assert {r["amt"] for r in v1["fact"].collect()} == {10.0, 20.0}
-    v2 = read_consistent(spark, root, ["dim"], ["fact"], manifest_id=2)
+    v2 = read_consistent(spark, root, ["dim", "fact"], manifest_id=2)
     assert {r["name"] for r in v2["dim"].collect()} == {"A", "B"}
     assert {r["amt"] for r in v2["fact"].collect()} == {11.0, 21.0}
 
@@ -77,12 +77,12 @@ def test_manifest_time_travel_across_tables(spark, tmp_path):
 def test_missing_manifest_or_table_raises(spark, tmp_path):
     root = str(tmp_path / "wh3")
     with pytest.raises(FileNotFoundError):
-        read_consistent(spark, root, ["dim"], [])
+        read_consistent(spark, root, ["dim"])
     _seed(spark, root)
     with pytest.raises(KeyError):
-        read_consistent(spark, root, ["dim", "other"], ["fact"])
+        read_consistent(spark, root, ["dim", "other", "fact"])
     with pytest.raises(FileNotFoundError):
-        read_consistent(spark, root, ["dim"], ["fact"], manifest_id=99)
+        read_consistent(spark, root, ["dim", "fact"], manifest_id=99)
 
 
 def test_publish_race_takes_next_id(spark, tmp_path):
